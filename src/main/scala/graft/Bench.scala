@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: times the headline queries (full materialization through
   * the noop sink — no driver collect, no result truncation) and prints one
   * JSON line.
@@ -9,31 +7,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // scale-adaptive, not a constant tuned for local[32]: shuffle
-      // parallelism tracks the executor core count the driver hands us
-      // (identical to the old hard-coded 32 at the 32-core bench point, so
-      // cross-round numbers stay comparable; the driver's lower-core
-      // scaling run no longer pays 32-task scheduling overhead on tiny
-      // post-AQE shuffles). On a real cluster this is the
-      // input-size-derived setting; AQE coalescing owns the final sizes.
-      // (validated: cpus may be any master-legal token such as "*")
-      .config("spark.sql.shuffle.partitions", GraftSession.shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // interleaved passes run ~15 other queries' stages between two runs
-      // of the same query; the default 100-entry generated-class cache
-      // evicts the first run's classes in between, so every pass would
-      // re-compile (janino) and re-JIT from scratch — steady state never
-      // arrives. Size the cache to hold the whole suite's generated code.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    functions.GraftFunctions.register(spark)
+    val spark = GraftSession.get("graft-bench")
 
     // warm up codegen, FS layer and the JIT before timing
     spark.range(1000000).selectExpr("sum(id)").collect()

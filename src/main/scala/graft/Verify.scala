@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,20 +8,9 @@ object Verify {
     // optional 3rd arg: comma-separated name filter for local iteration
     // (the driver always passes exactly two args → no filter)
     val only: Option[Set[String]] = args.lift(2).map(_.split(",").toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // cpus may be any master-legal token ("*"); partitions need an integer
-    val parts = scala.util.Try(cpus.trim.toInt).toOption.filter(_ > 0)
-      .getOrElse(Runtime.getRuntime.availableProcessors).toString
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // 58 queries in one JVM compile far more generated classes than the
-      // 100-entry default cache holds (see Bench/GraftSession)
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // Verify defaults to 4 cores where Bench defaults to 32
+    val spark = GraftSession.builder("graft-verify",
+      cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter { case (n, _) => only.forall(_.contains(n)) }

@@ -102,9 +102,12 @@ object StreamingAnomaly {
 
   /** Streaming CEP via flatMapGroupsWithState keyed by ip_dst. Events within
     * a micro-batch arrive unordered — they are sorted by event time before
-    * folding (state size is bounded by the batch's per-key volume; the open
-    * run itself is O(1)). Event-time timeout GC's keys idle past the match
-    * window, so state stays bounded at 100 TB/day key cardinalities.
+    * folding (the sort is bounded by the batch's per-key volume; the open
+    * run itself is O(maxRun)). Only keys with an open fragment run keep a
+    * state row: a key whose run closed or never opened has no state, which
+    * `step` already reads as `None`. An open run whose key goes quiet is
+    * dropped by an event-time timeout 10x the match window after its last
+    * event, so state stays bounded by the open runs, not by the key space.
     */
   def detectAttacks(events: Dataset[NetworkEvent], p: CepParams = CepParams())
       : Dataset[AttackResult] = {
@@ -131,11 +134,11 @@ object StreamingAnomaly {
               res.foreach(out += _)
             }
             st match {
-              case Some(r) => state.update(r)
+              case Some(r) =>
+                state.update(r)
+                state.setTimeoutTimestamp(sorted.last.timestamp_start + 10 * p.withinMs)
               case None => if (state.exists) state.remove()
             }
-            if (sorted.nonEmpty)
-              state.setTimeoutTimestamp(sorted.last.timestamp_start + 10 * p.withinMs)
             out.result().iterator
           }
       }

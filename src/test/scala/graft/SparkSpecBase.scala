@@ -6,14 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local session for all specs (one JVM under Test/fork). */
 object SharedSession {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .appName("graft-test")
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // the engine's own settings at a fixed 4 cores, whatever the
+    // machine: tests see the same session config as Bench and the tools
+    val s = GraftSession.builder("graft-test", cpus = "4").getOrCreate()
     functions.GraftFunctions.register(s)
     s.sparkContext.setLogLevel("WARN")
     s

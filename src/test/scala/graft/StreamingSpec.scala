@@ -1,9 +1,10 @@
 package graft
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.functions._
 
-import graft.model.NetworkEvent
+import graft.model.{AttackResult, NetworkEvent}
 import graft.sources.EventGen
 import graft.streaming.StreamingAnomaly
 
@@ -427,6 +428,65 @@ class StreamingSpec extends SparkSpecBase {
       .map(a => (a.attack_start_time, a.target_ip, a.fragment_count))
     assert(got.sorted.toSeq == exp.sorted.toSeq,
       s"recovery must be exactly-once: got ${got.length}, expected ${exp.length}")
+  }
+
+  test("detectAttacks restarts from its checkpoint mid-run: alerts == the batch fold, exactly") {
+    // Two stops, each cutting an attack burst between its fragments, so the
+    // open run must survive the checkpoint written by graft's manager.
+    val base = java.nio.file.Files.createTempDirectory("graft-restart").toString
+    val (in, out, ck) = (s"$base/in", s"$base/out", s"$base/ck")
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(in))
+    val resolved = org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager
+      .create(new org.apache.hadoop.fs.Path(s"file:$ck"), spark.sessionState.newHadoopConf())
+    assert(resolved.isInstanceOf[graft.streaming.GraftCheckpointFileManager])
+    // bursts open at output positions 200, 416, 632 and 848 (EventGen.stream)
+    val wire = toWireJson(events)
+    val parts = Seq(wire.slice(0, 208), wire.slice(208, 640), wire.drop(640))
+    parts.zipWithIndex.foreach { case (lines, i) =>
+      java.nio.file.Files.write(java.nio.file.Paths.get(in, s"part$i.jsonl"),
+        lines.mkString("\n").getBytes("UTF-8"))
+      val q = StreamingAnomaly.detectAttacks(StreamingAnomaly.parse(
+          spark.readStream.format("text").load(in)))
+        .writeStream.format("json")
+        .option("path", out).option("checkpointLocation", ck)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+      q.awaitTermination()
+    }
+    val got = spark.read.schema(Encoders.product[AttackResult].schema).json(out)
+      .as[AttackResult].collect().toSeq
+    val order = (a: AttackResult) => (a.attack_start_time, a.target_ip)
+    assert(got.sortBy(order) == expectedAttacks.sortBy(order))
+    assert(java.nio.file.Files.exists(java.nio.file.Paths.get(ck, "commits", ".2.crc")))
+  }
+
+  test("detectAttacks keeps state only for keys with an open fragment run") {
+    implicit val sqlCtx = spark.sqlContext
+    // ~2,000 distinct background keys (never a fragment), the spec's
+    // closed bursts, and k runs left open at the end of the stream
+    val background = EventGen.stream(seed = 7, n = 2000, burstLen = 15, attackEvery = 400)
+    val last = background.map(_.timestamp_end).max
+    val k = 6
+    val open = (0 until k).flatMap { t =>
+      (0 until 3).map(f => background.head.copy(ip_src = "192.168.9.9",
+        ip_dst = s"10.99.0.$t", timestamp_start = last + 10 * (3 * t + f),
+        timestamp_end = last + 10 * (3 * t + f) + 5, packets = 1, bytes = 40))
+    }
+    val all = background ++ open
+    val mem = MemoryStream[String]
+    val q = StreamingAnomaly.detectAttacks(StreamingAnomaly.parse(mem.toDF()))
+      .writeStream.format("memory").queryName("attacks_bounded").outputMode("append").start()
+    try {
+      val (b1, b2) = toWireJson(all).splitAt(all.length / 2)
+      mem.addData(b1); q.processAllAvailable()
+      mem.addData(b2); q.processAllAvailable()
+      assert(all.map(_.ip_dst).distinct.length > 1000)
+      assert(q.lastProgress.stateOperators(0).numRowsTotal == k)
+      val got = spark.table("attacks_bounded").as[AttackResult].collect().toSeq
+      val order = (a: AttackResult) => (a.attack_start_time, a.target_ip)
+      val exp = StreamingAnomaly.detectAttacksBatch(all)
+      assert(exp.nonEmpty)
+      assert(got.sortBy(order) == exp.sortBy(order))
+    } finally q.stop()
   }
 
   test("CEP state on RocksDB store: identical results, rocksdb metrics live") {
