@@ -1213,8 +1213,11 @@ object EventOps {
        |FROM d WHERE rn = 1 GROUP BY user_id ORDER BY user_id""".stripMargin
 
   /** Schema'd JSON extraction (reference serde:
-    * flink-app/.../serde/JsonDeserializationSchema.java) — from_json with an
-    * explicit schema stays inside codegen, no UDF.
+    * flink-app/.../serde/JsonDeserializationSchema.java) — one
+    * `get_json_object` path per row, cast to the field's type, no UDF.
+    * `get_json_object` takes part in whole-stage codegen; `from_json`
+    * (`JsonToStructs`, Spark 4.1) is `CodegenFallback`, an interpreted
+    * parse per evaluation.
     */
   def jsonExtract(s: SparkSession, dir: String): DataFrame =
     Tables.t(s, dir, "events")

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
@@ -34,15 +34,26 @@ object StreamingAnomaly {
     StructField("text", StringType)))
 
   /** JSON lines -> typed events (bad records dropped, like the reference's
-    * deserializer returning null on parse failure).
+    * deserializer returning null on parse failure). A record is kept only
+    * if it carries the key and every field `NetworkEvent` holds as a
+    * primitive: a missing or non-numeric one would fail the whole query at
+    * deserialization.
+    *
+    * The columns come out of a generator rather than a `select("e.*")` over
+    * a parsed struct: Catalyst pushes a filter on the struct's fields below
+    * that Project and substitutes the alias, so `from_json` (an interpreted
+    * Jackson parse) would run once per conjunct plus once for the columns.
+    * A filter on a generator's output stays above it, so each line is
+    * parsed once; for a line that does not parse, `inline` yields an
+    * all-null row, which the filter drops.
     */
   def parse(jsonLines: DataFrame): Dataset[NetworkEvent] = {
     val spark = jsonLines.sparkSession
     import spark.implicits._
     jsonLines
-      .select(from_json(col("value").cast(StringType), eventSchema).as("e"))
-      .filter(col("e").isNotNull && col("e.ip_dst").isNotNull)
-      .select("e.*")
+      .select(inline(array(from_json(col("value").cast(StringType), eventSchema))))
+      .filter(Seq("ip_dst", "timestamp_start", "timestamp_end", "packets", "bytes")
+        .map(col(_).isNotNull).reduce(_ && _))
       .as[NetworkEvent]
   }
 
@@ -58,6 +69,16 @@ object StreamingAnomaly {
       minRun: Int = 10,
       maxRun: Int = 30,
       withinMs: Long = 60000L)
+
+  /** The fields of an event the CEP fold reads. The detectors narrow their
+    * input to these before the shuffle, so the exchange, the sort and the
+    * decoding skip the payload text and the other unread columns.
+    */
+  final case class CepEvent(ip_src: String, ip_dst: String, timestamp_start: Long,
+      timestamp_end: Long, packets: Int, bytes: Int)
+
+  private val cepColumns: Seq[Column] =
+    Encoders.product[CepEvent].schema.fieldNames.toSeq.map(col)
 
   /** One buffered fragment of the open run. */
   final case class Frag(startMs: Long, endMs: Long, size: Double, src: String)
@@ -75,7 +96,7 @@ object StreamingAnomaly {
     * avg_fragment_size = mean(bytes/packets) over the matched fragments,
     * avg_packets = mean(packets) over the single "normal" event).
     */
-  private def step(st: Option[RunState], e: NetworkEvent, p: CepParams)
+  private def step(st: Option[RunState], e: CepEvent, p: CepParams)
       : (Option[RunState], Option[AttackResult]) = {
     if (e.packets < p.lowPackets) {
       val frag = Frag(e.timestamp_start, e.timestamp_end,
@@ -116,7 +137,8 @@ object StreamingAnomaly {
     events
       .withColumn("event_time", timestamp_millis(col("timestamp_start")))
       .withWatermark("event_time", "2 minutes")
-      .as[NetworkEvent]
+      .select(cepColumns :+ col("event_time"): _*) // the timeout needs the watermark column
+      .as[CepEvent]
       .groupByKey(_.ip_dst)
       .flatMapGroupsWithState[RunState, AttackResult](
         OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
@@ -158,6 +180,8 @@ object StreamingAnomaly {
     val spark = events.sparkSession
     import spark.implicits._
     events
+      .select(cepColumns: _*)
+      .as[CepEvent]
       .repartition(col("ip_dst"))
       .sortWithinPartitions(col("ip_dst"), col("timestamp_start"), col("timestamp_end"))
       .mapPartitions { it =>
@@ -177,7 +201,8 @@ object StreamingAnomaly {
     */
   def detectAttacksBatch(events: Seq[NetworkEvent], p: CepParams = CepParams())
       : Seq[AttackResult] = {
-    events.groupBy(_.ip_dst).toSeq.flatMap { case (_, es) =>
+    events.map(e => CepEvent(e.ip_src, e.ip_dst, e.timestamp_start, e.timestamp_end,
+        e.packets, e.bytes)).groupBy(_.ip_dst).toSeq.flatMap { case (_, es) =>
       val sorted = es.sortBy(e => (e.timestamp_start, e.timestamp_end))
       var st: Option[RunState] = None
       val out = Seq.newBuilder[AttackResult]

@@ -459,6 +459,39 @@ class StreamingSpec extends SparkSpecBase {
     assert(java.nio.file.Files.exists(java.nio.file.Paths.get(ck, "commits", ".2.crc")))
   }
 
+  test("detectAttacks resumes a checkpoint written when its fold shuffled whole events") {
+    // checkpoints/detect-attacks-wide-rows is this spec's first 208 wire
+    // events run through a MemoryStream (4 shuffle partitions) by the
+    // detectAttacks that grouped whole NetworkEvent rows. The cut falls
+    // inside the burst that opens at 200, so the alert closing that burst
+    // needs the open run restored from that state.
+    import java.nio.file.{Files, Paths}
+    implicit val sqlCtx = spark.sqlContext
+    val fixture = Paths.get(getClass.getResource("/checkpoints/detect-attacks-wide-rows").toURI)
+    val ck = Files.createTempDirectory("graft-wide-ck")
+    Files.walk(fixture).forEach { f =>
+      val to = ck.resolve(fixture.relativize(f).toString)
+      if (Files.isDirectory(f)) Files.createDirectories(to) else Files.copy(f, to)
+    }
+    val wire = toWireJson(events)
+    val mem = MemoryStream[String]
+    // the source replays from its start; the block the checkpoint committed
+    // (offset 0) must be skipped, only the rest is new
+    mem.addData(wire.take(208))
+    mem.addData(wire.drop(208))
+    val got = scala.collection.mutable.ArrayBuffer.empty[(Long, Seq[AttackResult])]
+    val q = StreamingAnomaly.detectAttacks(StreamingAnomaly.parse(mem.toDF()))
+      .writeStream.option("checkpointLocation", ck.toString)
+      .foreachBatch { (ds: org.apache.spark.sql.Dataset[AttackResult], id: Long) =>
+        got.synchronized { got += id -> ds.collect().toSeq }; ()
+      }
+      .start()
+    try q.processAllAvailable() finally q.stop()
+    assert(got.map(_._1).min == 2, s"resumed at batch ${got.map(_._1).min}, not after the checkpoint")
+    val order = (a: AttackResult) => (a.attack_start_time, a.target_ip)
+    assert(got.flatMap(_._2).sortBy(order) == expectedAttacks.sortBy(order))
+  }
+
   test("detectAttacks keeps state only for keys with an open fragment run") {
     implicit val sqlCtx = spark.sqlContext
     // ~2,000 distinct background keys (never a fragment), the spec's
@@ -549,10 +582,46 @@ class StreamingSpec extends SparkSpecBase {
 
   test("parse drops malformed json lines") {
     val good = """{"event_type":"GET","ip_src":"1.2.3.4","ip_dst":"5.6.7.8","port_src":"80","port_dst":"443","ip_proto":"TCP","timestamp_start":1000,"timestamp_end":2000,"packets":5,"bytes":100,"writer_id":"w","text":"t"}"""
-    val df = Seq(good, "not json at all", "{}").toDF("value")
+    // a key without the numeric fields, and a non-numeric packets count:
+    // both would fail the query when decoded into NetworkEvent's primitives
+    val noCounts = """{"ip_dst":"9.9.9.9"}"""
+    val badPackets = good.replace("\"packets\":5", "\"packets\":\"x\"")
+    val df = Seq(good, "not json at all", "{}", noCounts, badPackets, "[1,2]", "null")
+      .toDF("value")
     val parsed = StreamingAnomaly.parse(df).collect()
     assert(parsed.length == 1)
     assert(parsed(0).ip_dst == "5.6.7.8")
+  }
+
+  test("parse evaluates from_json once per line") {
+    // a filter over a parsed struct's alias is pushed below the Project and
+    // re-parses the line once per conjunct; the generator shape keeps one
+    val parsed = StreamingAnomaly.parse(toWireJson(events.take(10)).toDF("value"))
+    val parses = parsed.queryExecution.optimizedPlan.flatMap(_.expressions
+      .flatMap(_.collect { case j: org.apache.spark.sql.catalyst.expressions.JsonToStructs => j }))
+    assert(parses.length == 1, parsed.queryExecution.optimizedPlan.treeString)
+  }
+
+  test("detectAttacks shuffles only the CEP fields and the event time") {
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[String]
+    val q = StreamingAnomaly.detectAttacks(StreamingAnomaly.parse(mem.toDF()))
+      .writeStream.format("memory").queryName("attacks_narrow").outputMode("append").start()
+    try {
+      mem.addData(toWireJson(events.take(300))); q.processAllAvailable()
+      val plan = q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan
+      val shuffles = plan.collect { case x: ShuffleExchangeExec => x }
+      assert(shuffles.length == 1, plan.treeString)
+      // groupByKey appends the grouping key as a column of its own, the
+      // exchange's partitioning; every other column is the fold's input
+      val key = shuffles.head.outputPartitioning.asInstanceOf[HashPartitioning].references
+      val cols = shuffles.head.output.filterNot(key.contains).map(_.name).toSet
+      assert(cols == Set("ip_src", "ip_dst", "timestamp_start", "timestamp_end",
+        "packets", "bytes", "event_time"), plan.treeString)
+    } finally q.stop()
   }
 
   test("streaming ingest dedup drops corpus dups and in-stream replays") {
