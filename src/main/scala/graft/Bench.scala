@@ -96,18 +96,7 @@ object Bench {
       val times = samples(q.name)
       q.name -> (if (times.nonEmpty) Some(times.min) else None)
     }
-    // escape ALL control chars too — exception messages routinely contain
-    // newlines (plan fragments), which would break the one-line JSON
-    def jstr(s: String) = "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val qs = results.map { case (k, v) => jstr(k) + ":" + v.fold("null")(_.toString) }
+    val qs = results.map { case (k, v) => Json.str(k) + ":" + v.fold("null")(_.toString) }
       .mkString("{", ",", "}")
     val total = results.flatMap(_._2).sum
     // streaming soak (sustained ev/s + bounded-state evidence) rides along
@@ -193,7 +182,7 @@ object Bench {
     }
     val calibPost = Seq.fill(3)(calibRun()).min
     val calibJson = s"""{"sec":${math.min(calibPre, calibPost)},"pre":$calibPre,"post":$calibPost}"""
-    val errJson2 = errors.map { case (k, v) => jstr(k) + ":" + jstr(v) }
+    val errJson2 = errors.map { case (k, v) => Json.str(k) + ":" + Json.str(v) }
       .mkString("{", ",", "}")
     val fullJson = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"calib":$calibJson,"soak":$soakJson,"neardup_soak":$ndJson,"distinct_soak":$dsJson,"dp_soak":$dpJson,"ivjoin_soak":$ivjJson,"scoring_soak":$scJson,"index_serve":$serveJson,"errors":$errJson2,"sf":"$sfDir"}"""
     // The harness captures only the TAIL of stdout (a bounded window), and
@@ -210,7 +199,7 @@ object Bench {
       java.nio.file.Files.write(p, fullJson.getBytes("UTF-8"))
     } catch { case e: Throwable => System.err.println(s"[bench] write $outPath: $e") }
     println(fullJson)
-    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"calib":$calibJson,"errors":$errJson2,"sf":"$sfDir","full":${jstr(outPath)}}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"calib":$calibJson,"errors":$errJson2,"sf":"$sfDir","full":${Json.str(outPath)}}""")
     spark.stop()
     if (errors.nonEmpty) sys.exit(1)
   }

@@ -1,19 +1,26 @@
 package graft
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each SparkEntry.queries result → parquet, plus
+  * oracle_sql.json and queries.json, for the DuckDB compare (tools/check.py).
+  *
+  *   runMain graft.Verify <sfDir> <outDir> [name[,name…]]
+  *
+  * The optional 3rd argument restricts the run, and both JSON files, to the
+  * named registry queries.
+  */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
-    // optional 3rd arg: comma-separated name filter for local iteration
-    // (the driver always passes exactly two args → no filter)
-    val only: Option[Set[String]] = args.lift(2).map(_.split(",").toSet)
+    val names = select(SparkEntry.queries.keySet, args.lift(2)) match {
+      case Right(n) => n
+      case Left(err) => System.err.println(s"[verify] $err"); sys.exit(2)
+    }
     // Verify defaults to 4 cores where Bench defaults to 32
     val spark = GraftSession.builder("graft-verify",
       cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.filter { case (n, _) => only.forall(_.contains(n)) }
+    SparkEntry.queries.filter { case (n, _) => names(n) }
       .foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
@@ -22,26 +29,27 @@ object Verify {
       }
       finally spark.catalog.clearCache()
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = SparkEntry.oracleSql.filter { case (k, _) => names(k) }
+      .map { case (k, v) => s"${Json.str(k)}: ${Json.str(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // full declared-query list, so the gate can flag a crashed ROWS-ONLY
     // query (absent from oracle_sql.json AND from the output dirs) instead
     // of silently skipping it
     Files.writeString(Paths.get(s"$outDir/queries.json"),
-      SparkEntry.queries.keys.toSeq.sorted.map(q).mkString("[", ",", "]"))
+      names.toSeq.sorted.map(Json.str).mkString("[", ",", "]"))
     spark.stop()
   }
+
+  /** The query names a run covers: every `known` name without a filter,
+    * else the filter's comma-separated names. An unknown name is an error
+    * that lists the known ones.
+    */
+  def select(known: Set[String], filter: Option[String]): Either[String, Set[String]] =
+    filter.fold[Either[String, Set[String]]](Right(known)) { f =>
+      val wanted = f.split(",").toSet
+      val unknown = wanted -- known
+      if (unknown.isEmpty) Right(wanted)
+      else Left(s"unknown query ${unknown.toSeq.sorted.mkString(", ")} " +
+        s"(known: ${known.toSeq.sorted.mkString(", ")})")
+    }
 }

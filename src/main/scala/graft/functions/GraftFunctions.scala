@@ -79,20 +79,14 @@ object GraftFunctions {
         new ExpressionInfo("graft.functions", name),
         builder)
     }
-    val rules = spark.sessionState.experimentalMethods
-    if (!rules.extraOptimizations.contains(graft.plans.CollapseDistinctShingles))
-      rules.extraOptimizations =
-        rules.extraOptimizations :+ graft.plans.CollapseDistinctShingles
-    if (!rules.extraOptimizations.exists(_.isInstanceOf[graft.plans.ManifestPrune]))
-      rules.extraOptimizations =
-        rules.extraOptimizations :+ graft.plans.ManifestPrune(spark)
-    if (!rules.extraOptimizations.exists(_.isInstanceOf[graft.plans.ManifestAgg]))
-      rules.extraOptimizations =
-        rules.extraOptimizations :+ graft.plans.ManifestAgg(spark)
-    if (!rules.extraOptimizations.exists(_.isInstanceOf[graft.plans.BloomPrune]))
-      rules.extraOptimizations =
-        rules.extraOptimizations :+ graft.plans.BloomPrune(spark)
-    graft.plans.IntervalJoins.ensureStrategy(spark)
+    // idempotent per rule class: SparkEntry re-registers on every query
+    def missing[T](have: Seq[T], built: Seq[T]): Seq[T] =
+      built.filterNot(b => have.exists(_.getClass == b.getClass))
+    val ex = spark.experimental
+    ex.extraOptimizations ++=
+      missing(ex.extraOptimizations, graft.plans.GraftRules.optimizerRules.map(_(spark)))
+    ex.extraStrategies ++=
+      missing(ex.extraStrategies, graft.plans.GraftRules.strategies.map(_(spark)))
   }
 
   /** Make `graft_ln` resolvable on ANY session, registered or not:

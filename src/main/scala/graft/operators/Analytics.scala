@@ -85,9 +85,11 @@ object Analytics {
     // estimator inflates the o⋈c chain (join estimates multiply) and
     // broadcasts the projected LINEITEM instead — building a hash relation
     // of the biggest input, backwards at every scale (same-JVM A/B at
-    // sf0.1: 0.81 s static vs 0.68 s merge, `Exp q3ab`). At 100 TB the
-    // shuffle join on l_orderkey is what the planner falls back to anyway,
-    // so the hint only removes the toy-scale estimate accident.
+    // sf0.1: 0.81 s static vs 0.68 s merge; OPTIMIZATION_r17.md §3). A
+    // user join hint survives AQE re-optimization, so the hint pins
+    // sort-merge at every scale, also where the filtered o⋈c chain fits the
+    // broadcast threshold and AQE would otherwise broadcast it from runtime
+    // sizes.
     l.join(o.join(c, col("c_custkey") === col("o_custkey")).hint("merge"),
         col("o_orderkey") === col("l_orderkey"))
       .groupBy(col("l_orderkey"), epochUs(col("o_orderdate")).as("o_odate_us"),
@@ -128,8 +130,9 @@ object Analytics {
     // date-filtered orders annotated with nation — lineitem probes it.
     // The fact⋈chain join is DECLARED merge (r17, measured): the size-only
     // estimator inflates the chain and broadcast the projected LINEITEM
-    // instead (same-JVM A/B at sf0.1: 1.05 s static vs 0.93 s merge,
-    // `Exp q5ab`); at 100 TB the shuffle join is the plan either way.
+    // instead (same-JVM A/B at sf0.1: 1.05 s static vs 0.93 s merge;
+    // OPTIMIZATION_r17.md §3). As in q3, the hint pins sort-merge through
+    // AQE re-optimization, also where the chain would fit a broadcast.
     val chain = broadcast(r)
       .join(broadcast(n), col("n_regionkey") === col("r_regionkey"))
       .join(c, col("c_nationkey") === col("n_nationkey"))

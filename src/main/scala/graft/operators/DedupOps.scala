@@ -340,9 +340,9 @@ object DedupOps {
   // the bucket key, array_sort(collect_list(id)), explode the i < j
   // combinations) produces the identical pair set but measured ~25%
   // SLOWER on the bench corpus in a same-JVM interleaved A/B
-  // (`runMain graft.tools.Exp <sf> mhab` — candidate stage 1.05 s
-  // self-join vs 1.39 s grouped, full query 1.23 vs 1.57): the persisted
-  // pruned frame broadcasts locally, making the join map-side and
+  // (OPTIMIZATION_r17.md, "Tried, measured, REVERTED" — candidate stage
+  // 1.05 s self-join vs 1.39 s grouped, full query 1.23 vs 1.57): the
+  // persisted pruned frame broadcasts locally, making the join map-side and
   // shuffle-free, while the grouped form always pays a full hash exchange
   // plus an object aggregate. At cluster scale AQE replaces the broadcast
   // with the sort-merge join every Spark LSH runs — the self-join is the

@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.GraftSession
+import graft.{GraftSession, Json}
 import graft.sources.EventGen
 
 /** Runnable end-to-end streaming pipeline: JSON event files in ->
@@ -34,7 +34,7 @@ object StreamingDemo {
           s""""timestamp_end":${e.timestamp_end}""",
           s""""packets":${e.packets}""", s""""bytes":${e.bytes}""",
           s""""writer_id":"${e.writer_id}"""",
-          s""""text":"${e.text.replace("\\", "\\\\").replace("\"", "\\\"")}""""
+          s""""text":${Json.str(e.text)}"""
         ).mkString("{", ",", "}")
       }
       Files.write(Paths.get(inDir, "events.jsonl"),

@@ -1,612 +1,110 @@
 package graft.tools
 
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
+import org.apache.spark.sql.SparkSession
 
-import graft.Exact._
-import graft.GraftSession
-import graft.sources.Tables
+import graft.{GraftSession, Json, QueryDef, Registry}
 
-/** Scratch experiment main for decomposing query cost. Not part of the
-  * library surface.
+/** Same-JVM interleaved A/B of registry queries under two conf sets:
+  *
+  *   runMain graft.tools.Exp <sfDir> <reps> <query[,query…]> <confA> <confB>
+  *
+  * A conf set is `key=value[;key=value…]`, or `-` for the session as built.
+  * Per query: one warm-up draw of each arm, then `reps` pairs, alternating
+  * which arm goes first. A draw writes the query through the noop sink and
+  * ends with `clearCache`, timed as Bench times it; its arm's conf keys are
+  * set before it and restored after it. Prints one JSON line per query: both
+  * draw vectors (seconds, pair order), both medians, and the pairs each arm
+  * won (ties count for neither).
   */
 object Exp {
-  def main(args: Array[String]): Unit = {
-    val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
+  final case class Args(sfDir: String, reps: Int, queries: Seq[String],
+      confA: Seq[(String, String)], confB: Seq[(String, String)])
+
+  private val usage =
+    "usage: Exp <sfDir> <reps> <query[,query…]> <confA> <confB>  " +
+      "(conf set: key=value[;key=value…] or -)"
+
+  /** Checks every argument against the registry's `known` query names
+    * before any session exists.
+    */
+  def parse(args: Seq[String], known: Set[String]): Either[String, Args] = args match {
+    case Seq(sfDir, reps, queries, confA, confB) =>
+      val names = queries.split(",").toSeq.distinct
+      val unknown = names.filterNot(known)
+      for {
+        n <- reps.toIntOption.filter(_ > 0)
+          .toRight(s"reps must be a positive integer, got '$reps'")
+        _ <- Either.cond(unknown.isEmpty, (),
+          s"unknown query ${unknown.mkString(", ")} " +
+            s"(known: ${known.toSeq.sorted.mkString(", ")})")
+        a <- parseConf(confA)
+        b <- parseConf(confB)
+      } yield Args(sfDir, n, names, a, b)
+    case _ => Left(usage)
+  }
+
+  def parseConf(s: String): Either[String, Seq[(String, String)]] =
+    if (s == "-") Right(Nil)
+    else {
+      val entries = s.split(";").toSeq
+      entries.find(e => !e.contains('=') || e.takeWhile(_ != '=').trim.isEmpty) match {
+        case Some(bad) => Left(s"malformed conf entry '$bad' (want key=value)")
+        case None => Right(entries.map { e =>
+          val (k, v) = e.splitAt(e.indexOf('='))
+          k.trim -> v.drop(1).trim
+        })
+      }
+    }
+
+  /** Sets `conf` for the duration of `body`, then restores each key to its
+    * value before (unset when it had none).
+    */
+  private def withConf[T](spark: SparkSession, conf: Seq[(String, String)])(body: => T): T = {
+    val before = spark.conf.getAll
+    conf.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally conf.foreach { case (k, _) =>
+      before.get(k).fold(spark.conf.unset(k))(spark.conf.set(k, _))
+    }
+  }
+
+  private def median(xs: Seq[Double]): Double = {
+    val s = xs.sorted
+    if (s.length % 2 == 1) s(s.length / 2) else (s(s.length / 2 - 1) + s(s.length / 2)) / 2
+  }
+
+  def main(argv: Array[String]): Unit = {
+    val args = parse(argv.toSeq, Registry.byName.keySet) match {
+      case Right(a) => a
+      case Left(err) => System.err.println(s"[exp] $err"); sys.exit(2)
+    }
     val spark = GraftSession.get("exp")
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1000000).selectExpr("sum(id)").collect()
-    spark.read.parquet(s"$dir/nation.parquet").count()
-    def time(name: String)(act: => Unit): Unit = {
-      val ts = (1 to 3).map { _ =>
-        val t0 = System.nanoTime(); act; (System.nanoTime() - t0) / 1e9
-      }
-      println(f"EXP $name%-30s best ${ts.min}%6.3f  all ${ts.map(t => f"$t%.3f").mkString(" ")}")
-    }
-    if (args.contains("jaccard")) {
-      import graft.operators.DedupOps
-      val docs = Tables.t(spark, dir, "documents")
-      time("j_count") { docs.count() }
-      time("j_shingle_only") {
-        Tables.spread(docs).withColumn("shs",
-          graft.functions.GraftFunctions.graftWordShingles(col("text"), 5))
-          .select("doc_id", "shs").write.format("noop").mode("overwrite").save()
-      }
-      time("j_capped_shingles") {
-        val eff = DedupOps.cappedShingles(docs, 1000L)
-        eff.write.format("noop").mode("overwrite").save()
-        // clearCache, not just eff.unpersist: cappedShingles persists the
-        // raw shingle frame internally, and a leaked cache makes every
-        // later rep (and j_full) read warm — this probe's round-4 numbers
-        // were tainted exactly that way before this line existed
-        spark.catalog.clearCache()
-      }
-      time("j_full") {
-        DedupOps.jaccardPairs(spark, dir).write.format("noop").mode("overwrite").save()
-        spark.catalog.clearCache()
-      }
-      val nCand = DedupOps.jaccardCandidates(docs, 1000L).count()
+    // an unsettable key (a static conf) fails here, before any job
+    Seq(args.confA, args.confB).foreach(withConf(spark, _)(()))
+    def draw(q: QueryDef, conf: Seq[(String, String)]): Double = withConf(spark, conf) {
+      val t0 = System.nanoTime()
+      q.build(spark, args.sfDir).write.format("noop").mode("overwrite").save()
+      val dt = (System.nanoTime() - t0) / 1e9
       spark.catalog.clearCache()
-      println(s"EXP j_candidates $nCand")
-      spark.stop(); return
+      dt
     }
-    if (args.contains("plan")) {
-      val q = graft.Registry.all.find(_.name == args.last).get
-      val df = q.build(spark, dir)
-      df.write.format("noop").mode("overwrite").save()
-      println("PLAN-BEGIN")
-      println(df.queryExecution.executedPlan.toString.take(8000))
-      println("PLAN-END")
-      spark.stop(); return
-    }
-    if (args.contains("cep")) {
-      val e = Tables.t(spark, dir, "events")
-      time("c_scan") { e.write.format("noop").mode("overwrite").save() }
-      time("c_window1") {
-        import org.apache.spark.sql.expressions.Window
-        val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-        e.withColumn("rn", row_number().over(w))
-          .write.format("noop").mode("overwrite").save()
+    args.queries.map(Registry.byName).foreach { q =>
+      draw(q, args.confA); draw(q, args.confB)
+      val pairs = (0 until args.reps).map { i =>
+        if (i % 2 == 0) { val a = draw(q, args.confA); (a, draw(q, args.confB)) }
+        else { val b = draw(q, args.confB); (draw(q, args.confA), b) }
       }
-      time("c_full") {
-        graft.operators.EventOps.cepAttack(spark, dir)
-          .write.format("noop").mode("overwrite").save()
-      }
-      spark.stop(); return
-    }
-    if (args.contains("minhash")) {
-      import graft.operators.DedupOps
-      val docs = Tables.t(spark, dir, "documents")
-      time("m_shingle_sig") {
-        Tables.spread(docs).withColumn("shs",
-          graft.functions.GraftFunctions.graftWordShingles(col("text"), 5))
-          .filter(size(col("shs")) > 0)
-          .withColumn("sig", graft.functions.GraftFunctions.graftMinHashSig(col("shs")))
-          .write.format("noop").mode("overwrite").save()
-      }
-      time("m_full") {
-        DedupOps.minHashLsh(spark, dir).write.format("noop").mode("overwrite").save()
-        spark.catalog.clearCache()
-      }
-      spark.stop(); return
-    }
-    if (args.contains("cfgab")) {
-      // suite-wide same-JVM A/B: estimate-based static broadcasts (default)
-      // vs runtime-size-only broadcasts (static off, AQE threshold pinned
-      // to the default 10m). Hinted dim broadcasts are unaffected either
-      // way. Interleaved passes over all headline queries.
-      val qs = graft.Registry.all.filter(_.headline)
-      def t(act: => Unit): Double = {
-        val t0 = System.nanoTime(); act; (System.nanoTime() - t0) / 1e9
-      }
-      def runSuite(): Map[String, Double] =
-        qs.map { q =>
-          val dt = t {
-            q.build(spark, dir).write.format("noop").mode("overwrite").save()
-            spark.catalog.clearCache()
-          }
-          q.name -> dt
-        }.toMap
-      def setRuntimeOnly(): Unit = {
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "10485760")
-      }
-      def setDefault(): Unit = {
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
-      }
-      // warmup both codegen universes
-      setDefault(); runSuite(); setRuntimeOnly(); runSuite()
-      val accA = scala.collection.mutable.Map[String, List[Double]]().withDefaultValue(Nil)
-      val accB = scala.collection.mutable.Map[String, List[Double]]().withDefaultValue(Nil)
-      for (_ <- 1 to 3) {
-        setDefault(); runSuite().foreach { case (k, v) => accA(k) = v :: accA(k) }
-        setRuntimeOnly(); runSuite().foreach { case (k, v) => accB(k) = v :: accB(k) }
-      }
-      setDefault()
-      var ta = 0.0; var tb = 0.0
-      qs.foreach { q =>
-        val a = accA(q.name).min; val b = accB(q.name).min
-        ta += a; tb += b
-        println(f"EXP cfgab ${q.name}%-24s default ${a}%6.3f  runtime-only ${b}%6.3f")
-      }
-      println(f"EXP cfgab TOTAL default ${ta}%6.3f  runtime-only ${tb}%6.3f")
-      spark.stop(); return
-    }
-    if (args.contains("q3ab")) {
-      // targeted: q3's final fact⋈chain join declared merge (SMJ) vs the
-      // planner's static choice (which broadcasts the projected lineitem)
-      import graft.operators.Analytics
-      def t(act: => Unit): Double = {
-        val t0 = System.nanoTime(); act; (System.nanoTime() - t0) / 1e9
-      }
-      def cur(): Unit = {
-        Analytics.q3ShippingPriority(spark, dir).write.format("noop").mode("overwrite").save()
-        spark.catalog.clearCache()
-      }
-      def alt(): Unit = {
-        val cutoff = lit("1998-01-01")
-        val c = Tables.t(spark, dir, "customer").filter(col("c_mktsegment") === "BUILDING")
-        val o = Tables.t(spark, dir, "orders").filter(col("o_orderdate") < cutoff)
-        val l = Tables.t(spark, dir, "lineitem").filter(col("l_shipdate") > cutoff)
-        l.join(o.join(c, col("c_custkey") === col("o_custkey")).hint("merge"),
-            col("o_orderkey") === col("l_orderkey"))
-          .groupBy(col("l_orderkey"), graft.Exact.epochUs(col("o_orderdate")).as("o_odate_us"),
-            col("o_orderpriority"))
-          .agg(lsum(centsDisc(col("l_extendedprice"), col("l_discount")), 4)
-            .as("revenue"))
-          .select("l_orderkey", "revenue", "o_odate_us", "o_orderpriority")
-          .orderBy("l_orderkey")
-          .write.format("noop").mode("overwrite").save()
-        spark.catalog.clearCache()
-      }
-      val a = scala.collection.mutable.ArrayBuffer[Double]()
-      val b = scala.collection.mutable.ArrayBuffer[Double]()
-      t(cur()); t(alt())
-      for (_ <- 1 to 4) { a += t(cur()); b += t(alt()) }
-      println(f"EXP q3ab CUR(static)  best ${a.min}%6.3f all ${a.map(x => f"$x%.3f").mkString(" ")}")
-      println(f"EXP q3ab ALT(merge)   best ${b.min}%6.3f all ${b.map(x => f"$x%.3f").mkString(" ")}")
-      spark.stop(); return
-    }
-    if (args.contains("q5ab")) {
-      // probe ONLY (scale-unsafe hint, never shipped): does the planner's
-      // broadcast-the-projected-lineitem choice on q5's final join cost
-      // anything vs broadcasting the o⋈c chain? Decides whether the
-      // estimate quirk is worth engineering around.
-      import graft.operators.Analytics
-      def t(act: => Unit): Double = {
-        val t0 = System.nanoTime(); act; (System.nanoTime() - t0) / 1e9
-      }
-      def cur(): Unit = {
-        Analytics.q5LocalSupplier(spark, dir).write.format("noop").mode("overwrite").save()
-        spark.catalog.clearCache()
-      }
-      def alt(): Unit = {
-        val r = Tables.t(spark, dir, "region").filter(col("r_name") === "ASIA")
-        val n = Tables.t(spark, dir, "nation")
-        val sup = Tables.t(spark, dir, "supplier")
-        val c = Tables.t(spark, dir, "customer")
-        val o = Tables.t(spark, dir, "orders")
-          .filter(col("o_orderdate") >= lit("1996-01-01") &&
-            col("o_orderdate") < lit("1998-01-01"))
-        val l = Tables.t(spark, dir, "lineitem")
-        val chain = broadcast(r)
-          .join(broadcast(n), col("n_regionkey") === col("r_regionkey"))
-          .join(c, col("c_nationkey") === col("n_nationkey"))
-          .join(o, col("o_custkey") === col("c_custkey"))
-        l.join(broadcast(chain), col("l_orderkey") === col("o_orderkey"))
-          .join(broadcast(sup),
-            col("l_suppkey") === col("s_suppkey") &&
-              col("c_nationkey") === col("s_nationkey"))
-          .groupBy("n_name")
-          .agg(sum((col("l_extendedprice") * (lit(1.0) - col("l_discount")))).as("revenue"))
-          .orderBy("n_name")
-          .write.format("noop").mode("overwrite").save()
-        spark.catalog.clearCache()
-      }
-      // alt2: chain-broadcast join shape + the REAL salted-cents agg tail
-      // (isolates the join-shape effect from the aggregate difference)
-      def alt2(): Unit = {
-        val r = Tables.t(spark, dir, "region").filter(col("r_name") === "ASIA")
-        val n = Tables.t(spark, dir, "nation")
-        val sup = Tables.t(spark, dir, "supplier")
-        val c = Tables.t(spark, dir, "customer")
-        val o = Tables.t(spark, dir, "orders")
-          .filter(col("o_orderdate") >= lit("1996-01-01") &&
-            col("o_orderdate") < lit("1998-01-01"))
-        val l = Tables.t(spark, dir, "lineitem")
-        val chain = broadcast(r)
-          .join(broadcast(n), col("n_regionkey") === col("r_regionkey"))
-          .join(c, col("c_nationkey") === col("n_nationkey"))
-          .join(o, col("o_custkey") === col("c_custkey"))
-        l.join(broadcast(chain), col("l_orderkey") === col("o_orderkey"))
-          .join(broadcast(sup),
-            col("l_suppkey") === col("s_suppkey") &&
-              col("c_nationkey") === col("s_nationkey"))
-          .transform(withSalt(_, col("o_orderkey")))
-          .groupBy("n_name", "__salt")
-          .agg(sum(centsDisc(col("l_extendedprice"), col("l_discount"))).as("c_rev"))
-          .groupBy("n_name")
-          .agg(rollupCents(col("c_rev"), 4).as("revenue"))
-          .orderBy("n_name")
-          .write.format("noop").mode("overwrite").save()
-        spark.catalog.clearCache()
-      }
-      // scale-safe candidates: how the final fact⋈chain join is declared
-      def q5tail(joined: org.apache.spark.sql.DataFrame): Unit = {
-        joined
-          .transform(withSalt(_, col("o_orderkey")))
-          .groupBy("n_name", "__salt")
-          .agg(sum(centsDisc(col("l_extendedprice"), col("l_discount"))).as("c_rev"))
-          .groupBy("n_name")
-          .agg(rollupCents(col("c_rev"), 4).as("revenue"))
-          .orderBy("n_name")
-          .write.format("noop").mode("overwrite").save()
-        spark.catalog.clearCache()
-      }
-      def q5chain() = {
-        val r = Tables.t(spark, dir, "region").filter(col("r_name") === "ASIA")
-        val n = Tables.t(spark, dir, "nation")
-        val c = Tables.t(spark, dir, "customer")
-        val o = Tables.t(spark, dir, "orders")
-          .filter(col("o_orderdate") >= lit("1996-01-01") &&
-            col("o_orderdate") < lit("1998-01-01"))
-        broadcast(r)
-          .join(broadcast(n), col("n_regionkey") === col("r_regionkey"))
-          .join(c, col("c_nationkey") === col("n_nationkey"))
-          .join(o, col("o_custkey") === col("c_custkey"))
-      }
-      def sup() = Tables.t(spark, dir, "supplier")
-      def li() = Tables.t(spark, dir, "lineitem")
-      // merge-hinted SMJ: AQE should convert to a broadcast of the truly
-      // smaller side from RUNTIME sizes (scale-adaptive by construction)
-      def alt3(): Unit = q5tail(
-        li().join(q5chain().hint("merge"), col("l_orderkey") === col("o_orderkey"))
-          .join(broadcast(sup()),
-            col("l_suppkey") === col("s_suppkey") &&
-              col("c_nationkey") === col("s_nationkey")))
-      // shuffled-hash with the chain as declared build side
-      def alt4(): Unit = q5tail(
-        li().join(q5chain().hint("shuffle_hash"), col("l_orderkey") === col("o_orderkey"))
-          .join(broadcast(sup()),
-            col("l_suppkey") === col("s_suppkey") &&
-              col("c_nationkey") === col("s_nationkey")))
-      if (args.contains("plan3")) {
-        val df = li().join(q5chain().hint("merge"), col("l_orderkey") === col("o_orderkey"))
-          .join(broadcast(sup()),
-            col("l_suppkey") === col("s_suppkey") &&
-              col("c_nationkey") === col("s_nationkey"))
-        df.write.format("noop").mode("overwrite").save()
-        println("PLAN-BEGIN")
-        println(df.queryExecution.executedPlan.toString.take(6000))
-        println("PLAN-END")
-        spark.stop(); return
-      }
-      val a = scala.collection.mutable.ArrayBuffer[Double]()
-      val b = scala.collection.mutable.ArrayBuffer[Double]()
-      val b2 = scala.collection.mutable.ArrayBuffer[Double]()
-      val b3 = scala.collection.mutable.ArrayBuffer[Double]()
-      val b4 = scala.collection.mutable.ArrayBuffer[Double]()
-      t(cur()); t(alt()); t(alt2()); t(alt3()); t(alt4())
-      for (_ <- 1 to 4) {
-        a += t(cur()); b += t(alt()); b2 += t(alt2()); b3 += t(alt3()); b4 += t(alt4())
-      }
-      println(f"EXP q5ab CUR(bc-lineitem) best ${a.min}%6.3f all ${a.map(x => f"$x%.3f").mkString(" ")}")
-      println(f"EXP q5ab ALT(bc-chain)    best ${b.min}%6.3f all ${b.map(x => f"$x%.3f").mkString(" ")}")
-      println(f"EXP q5ab ALT2(bc-chain+salted-cents) best ${b2.min}%6.3f all ${b2.map(x => f"$x%.3f").mkString(" ")}")
-      println(f"EXP q5ab ALT3(merge-hint+AQE)        best ${b3.min}%6.3f all ${b3.map(x => f"$x%.3f").mkString(" ")}")
-      println(f"EXP q5ab ALT4(shuffle-hash)          best ${b4.min}%6.3f all ${b4.map(x => f"$x%.3f").mkString(" ")}")
-      spark.stop(); return
-    }
-    if (args.contains("jcab")) {
-      // same-JVM interleaved A/B for the r17 cands-persist drop: the gated
-      // jaccard query (no candidate cache) vs an inline twin WITH the old
-      // MEMORY_AND_DISK candidate persist
-      import graft.operators.DedupOps
-      import org.apache.spark.sql.types.DoubleType
-      val docs = Tables.t(spark, dir, "documents")
-      def t(act: => Unit): Double = {
-        val t0 = System.nanoTime(); act; (System.nanoTime() - t0) / 1e9
-      }
-      def newQ(): Unit = {
-        DedupOps.jaccardPairs(spark, dir).write.format("noop").mode("overwrite").save()
-        spark.catalog.clearCache()
-      }
-      def oldQ(): Unit = {
-        val raw = DedupOps.rawShingles(docs)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val eff = DedupOps.cappedShinglesFrom(raw, DedupOps.AdaptiveCap)
-        val cands = DedupOps.jaccardCandidatesFrom(eff)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        cands
-          .join(eff.select(col("doc_id").as("d1"), col("shs").as("shs1"),
-            col("n_sh").as("n1")), "d1")
-          .join(eff.select(col("doc_id").as("d2"), col("shs").as("shs2"),
-            col("n_sh").as("n2")), "d2")
-          .withColumn("common", size(array_intersect(col("shs1"), col("shs2"))).cast("long"))
-          .withColumn("jaccard", col("common").cast(DoubleType) /
-            (col("n1") + col("n2") - col("common")).cast(DoubleType))
-          .filter(col("jaccard") >= 0.8)
-          .select("d1", "d2", "common", "jaccard")
-          .orderBy("d1", "d2")
-          .write.format("noop").mode("overwrite").save()
-        spark.catalog.clearCache()
-      }
-      val o = scala.collection.mutable.ArrayBuffer[Double]()
-      val n = scala.collection.mutable.ArrayBuffer[Double]()
-      t(oldQ()); t(newQ())
-      for (_ <- 1 to 4) { o += t(oldQ()); n += t(newQ()) }
-      println(f"EXP jcab OLD(persist) best ${o.min}%6.3f all ${o.map(x => f"$x%.3f").mkString(" ")}")
-      println(f"EXP jcab NEW(no-pers) best ${n.min}%6.3f all ${n.map(x => f"$x%.3f").mkString(" ")}")
-      spark.stop(); return
-    }
-    if (args.contains("mhab")) {
-      // same-JVM interleaved A/B: the r17 grouped in-bucket pair expansion
-      // vs an inline reconstruction of the old prune + persisted self-join
-      // (identical pair set; this isolates the pair-stage shape from slot
-      // drift, which poisons cross-run bench comparisons)
-      import graft.operators.DedupOps
-      import org.apache.spark.sql.types.DoubleType
-      val docs = Tables.t(spark, dir, "documents")
-      def oldShape(): Unit = {
-        val sh = DedupOps.minhashSigs(docs)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val pruned = DedupOps.pruneHotBuckets(
-            DedupOps.bandRows(sh), Seq("band", "bkey"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val cands = pruned.as("a")
-          .join(pruned.as("b"),
-            col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
-              col("a.doc_id") < col("b.doc_id"))
-          .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
-          .distinct()
-        cands
-          .join(sh.select(col("doc_id").as("d1"), col("hsh").as("hsh1")), "d1")
-          .join(sh.select(col("doc_id").as("d2"), col("hsh").as("hsh2")), "d2")
-          .withColumn("common", size(array_intersect(col("hsh1"), col("hsh2"))))
-          .withColumn("jaccard", col("common").cast(DoubleType) /
-            (size(col("hsh1")) + size(col("hsh2")) - col("common")).cast(DoubleType))
-          .filter(col("jaccard") >= 0.7)
-          .select("d1", "d2", "jaccard")
-          .orderBy("d1", "d2")
-          .write.format("noop").mode("overwrite").save()
-        spark.catalog.clearCache()
-      }
-      // the r17 grouped in-bucket expansion, inlined (tried and REVERTED in
-      // the operators — kept here as the runnable negative-result evidence):
-      // prune hot buckets, collect each surviving bucket, sort, expand the
-      // i < j combinations map-side
-      def groupedPairs(exploded: org.apache.spark.sql.DataFrame,
-          keys: Seq[String], id: org.apache.spark.sql.Column): org.apache.spark.sql.DataFrame = {
-        val pruned = DedupOps.pruneHotBuckets(
-          exploded.select(keys.map(col) :+ id.as("__id"): _*), keys)
-        pruned.groupBy(keys.map(col): _*)
-          .agg(array_sort(collect_list(col("__id"))).as("ds"))
-          .select(explode(flatten(transform(col("ds"), (x, i) =>
-            transform(slice(col("ds"), i + lit(2), size(col("ds"))),
-              y => struct(x.as("a"), y.as("b")))))).as("p"))
-          .select(col("p.a").as("a"), col("p.b").as("b"))
-      }
-      def newShape(): Unit = {
-        val sh = DedupOps.minhashSigs(docs)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val cands = groupedPairs(DedupOps.bandRows(sh), Seq("band", "bkey"), col("doc_id"))
-          .select(col("a").as("d1"), col("b").as("d2"))
-          .distinct()
-        cands
-          .join(sh.select(col("doc_id").as("d1"), col("hsh").as("hsh1")), "d1")
-          .join(sh.select(col("doc_id").as("d2"), col("hsh").as("hsh2")), "d2")
-          .withColumn("common", size(array_intersect(col("hsh1"), col("hsh2"))))
-          .withColumn("jaccard", col("common").cast(DoubleType) /
-            (size(col("hsh1")) + size(col("hsh2")) - col("common")).cast(DoubleType))
-          .filter(col("jaccard") >= 0.7)
-          .select("d1", "d2", "jaccard")
-          .orderBy("d1", "d2")
-          .write.format("noop").mode("overwrite").save()
-        spark.catalog.clearCache()
-      }
-      def t(act: => Unit): Double = {
-        val t0 = System.nanoTime(); act; (System.nanoTime() - t0) / 1e9
-      }
-      // candidate-stage-only variants: pair generation without the verify
-      def oldCands(): Unit = {
-        val sh = DedupOps.minhashSigs(docs)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val pruned = DedupOps.pruneHotBuckets(
-            DedupOps.bandRows(sh), Seq("band", "bkey"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        pruned.as("a")
-          .join(pruned.as("b"),
-            col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
-              col("a.doc_id") < col("b.doc_id"))
-          .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
-          .distinct()
-          .write.format("noop").mode("overwrite").save()
-        spark.catalog.clearCache()
-      }
-      def newCands(): Unit = {
-        val sh = DedupOps.minhashSigs(docs)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        groupedPairs(DedupOps.bandRows(sh), Seq("band", "bkey"), col("doc_id"))
-          .select(col("a").as("d1"), col("b").as("d2"))
-          .distinct()
-          .write.format("noop").mode("overwrite").save()
-        spark.catalog.clearCache()
-      }
-      // double-explode expansion: same pair set, no higher-order functions
-      // (ArrayTransform/Flatten are CodegenFallback), two codegen Generates
-      def newCands2(): Unit = {
-        val sh = DedupOps.minhashSigs(docs)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val pruned = DedupOps.pruneHotBuckets(
-          DedupOps.bandRows(sh).select(col("band"), col("bkey"), col("doc_id")),
-          Seq("band", "bkey"))
-        pruned.groupBy("band", "bkey")
-          .agg(array_sort(collect_list(col("doc_id"))).as("ds"))
-          .select(posexplode(col("ds")).as(Seq("i", "d1")), col("ds"))
-          .select(col("d1"),
-            explode(slice(col("ds"), col("i") + lit(2), size(col("ds")))).as("d2"))
-          .distinct()
-          .write.format("noop").mode("overwrite").save()
-        spark.catalog.clearCache()
-      }
-      // the old self-join minus the pruned persist (both sides re-derive
-      // the banding off the signature cache)
-      def oldCands2(): Unit = {
-        val sh = DedupOps.minhashSigs(docs)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val pruned = DedupOps.pruneHotBuckets(
-          DedupOps.bandRows(sh), Seq("band", "bkey"))
-        pruned.as("a")
-          .join(pruned.as("b"),
-            col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
-              col("a.doc_id") < col("b.doc_id"))
-          .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
-          .distinct()
-          .write.format("noop").mode("overwrite").save()
-        spark.catalog.clearCache()
-      }
-      val olds = scala.collection.mutable.ArrayBuffer[Double]()
-      val news = scala.collection.mutable.ArrayBuffer[Double]()
-      val oldc = scala.collection.mutable.ArrayBuffer[Double]()
-      val newc = scala.collection.mutable.ArrayBuffer[Double]()
-      val oldc2 = scala.collection.mutable.ArrayBuffer[Double]()
-      val newc2 = scala.collection.mutable.ArrayBuffer[Double]()
-      t(oldShape()); t(newShape()); t(oldCands()); t(newCands())
-      t(oldCands2()); t(newCands2()) // untimed warmup
-      for (_ <- 1 to 4) {
-        olds += t(oldShape()); news += t(newShape())
-        oldc += t(oldCands()); newc += t(newCands())
-        oldc2 += t(oldCands2()); newc2 += t(newCands2())
-      }
-      def row(n: String, xs: Seq[Double]) =
-        println(f"EXP mhab $n best ${xs.min}%6.3f all ${xs.map(x => f"$x%.3f").mkString(" ")}")
-      row("OLD  ", olds.toSeq); row("NEW  ", news.toSeq)
-      row("OLDc ", oldc.toSeq); row("NEWc ", newc.toSeq)
-      row("OLDc2", oldc2.toSeq); row("NEWc2", newc2.toSeq)
-      spark.stop(); return
-    }
-    if (args.contains("probe")) {
-      // decompose the from-index minhash probe at the Stress xN corpus
-      // shape: where does serve latency go once corpus shingling is gone?
-      import graft.operators.DedupOps
-      val copies = 10
-      val docs = Tables.t(spark, dir, "documents")
-      def perturb(i: Int) = expr(
-        s"concat(text, ' v$i tail ', repeat('pad$i ', ${i % 3}))")
-      val docsN = (0 until copies).map { i =>
-        docs.select((col("doc_id") + lit(i * 10000000L)).as("doc_id"),
-          perturb(i).as("text"))
-      }.reduce(_ unionByName _)
-      val batch = docs.filter(col("doc_id") % 10 === 3)
-        .select((col("doc_id") + lit(900000000L)).as("doc_id"),
-          perturb(0).as("text"))
-      val idx = java.nio.file.Files.createTempDirectory("graft-exp-mh")
-        .toString + "/mh"
-      DedupOps.writeMinHashIndex(docsN, idx)
-      spark.catalog.clearCache()
-      time("p_batch_sig") {
-        DedupOps.minhashSigs(batch).write.format("noop").mode("overwrite").save()
-      }
-      time("p_bands_scan") {
-        spark.read.parquet(s"$idx/bands").write.format("noop").mode("overwrite").save()
-      }
-      time("p_bands_pruned") {
-        DedupOps.pruneHotBuckets(spark.read.parquet(s"$idx/bands"),
-          Seq("band", "bkey")).write.format("noop").mode("overwrite").save()
-      }
-      time("p_cand_join") {
-        val bs = DedupOps.minhashSigs(batch)
-        DedupOps.pruneHotBuckets(spark.read.parquet(s"$idx/bands"),
-            Seq("band", "bkey")).as("c")
-          .join(broadcast(DedupOps.bandRows(bs).as("b")),
-            col("c.band") === col("b.band") && col("c.bkey") === col("b.bkey"))
-          .select(col("b.doc_id").as("batch_doc"), col("c.doc_id").as("corpus_doc"))
-          .distinct().limit(100001).collect()
-      }
-      time("p_from_index") {
-        DedupOps.incrementalMinHashFromIndex(spark, batch, idx).count()
-        spark.catalog.clearCache()
-      }
-      time("p_self_contained") {
-        DedupOps.incrementalMinHashOn(docsN, batch).count()
-        spark.catalog.clearCache()
-      }
-      val nCand = {
-        val bs = DedupOps.minhashSigs(batch)
-        DedupOps.pruneHotBuckets(spark.read.parquet(s"$idx/bands"),
-            Seq("band", "bkey")).as("c")
-          .join(broadcast(DedupOps.bandRows(bs).as("b")),
-            col("c.band") === col("b.band") && col("c.bkey") === col("b.bkey"))
-          .select(col("c.doc_id")).distinct().count()
-      }
-      println(s"EXP p_distinct_corpus_ids $nCand")
-      spark.conf.set("spark.graft.index.lookupMax", "1")
-      time("p_from_index_stream") {
-        DedupOps.incrementalMinHashFromIndex(spark, batch, idx).count()
-        spark.catalog.clearCache()
-      }
-      spark.conf.unset("spark.graft.index.lookupMax")
-      graft.sources.Bucketed.dropRegistration(spark, s"$idx/sigs")
-      import scala.reflect.io.Directory
-      new Directory(new java.io.File(idx).getParentFile).deleteRecursively()
-      spark.stop(); return
-    }
-    val l = Tables.t(spark, dir, "lineitem")
-    time("scan_count") { l.count() }
-    time("scan_all_cols_noop") { l.write.format("noop").mode("overwrite").save() }
-    time("scan_q1_cols") {
-      l.select("l_shipdate", "l_returnflag", "l_linestatus", "l_quantity",
-        "l_extendedprice", "l_discount", "l_tax")
-        .write.format("noop").mode("overwrite").save()
-    }
-    time("agg_count_only") {
-      l.filter(col("l_shipdate") <= lit("2000-12-01"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(count(lit(1))).write.format("noop").mode("overwrite").save()
-    }
-    time("agg_double_sums") {
-      l.filter(col("l_shipdate") <= lit("2000-12-01"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(sum(col("l_quantity").cast(DoubleType)),
-          sum(col("l_extendedprice").cast(DoubleType)))
-        .write.format("noop").mode("overwrite").save()
-    }
-    time("agg_long_cents_salted_q1") {
-      def cents(c: org.apache.spark.sql.Column, s: Int) =
-        floor(c * math.pow(10, s) + lit(0.5)).cast(LongType)
-      val base = l.filter(col("l_shipdate") <= lit("2000-12-01"))
-        .withColumn("__salt", pmod(xxhash64(col("l_orderkey")), lit(1024)))
-        .groupBy(col("l_returnflag"), col("l_linestatus"), col("__salt"))
-        .agg(
-          sum(cents(col("l_quantity"), 2)).as("c_qty"),
-          sum(cents(col("l_extendedprice"), 2)).as("c_price"),
-          sum(cents(col("l_extendedprice"), 2) * cents(lit(1) - col("l_discount"), 2)).as("c_disc"),
-          sum(cents(col("l_extendedprice"), 2) *
-            cents((lit(1) - col("l_discount")) * (lit(1) + col("l_tax")), 4)).as("c_charge"),
-          count(lit(1)).as("n"))
-      base.groupBy("l_returnflag", "l_linestatus")
-        .agg(
-          (sum(col("c_qty").cast(DecimalType(38, 0))).cast(DoubleType) / 100.0).as("sum_qty"),
-          (sum(col("c_price").cast(DecimalType(38, 0))).cast(DoubleType) / 100.0).as("sum_base_price"),
-          (sum(col("c_disc").cast(DecimalType(38, 0))).cast(DoubleType) / 10000.0).as("sum_disc_price"),
-          (sum(col("c_charge").cast(DecimalType(38, 0))).cast(DoubleType) / 1000000.0).as("sum_charge"),
-          sum(col("n")).as("count_order"))
-        .write.format("noop").mode("overwrite").save()
-    }
-    time("agg_decimal_sums_q1") {
-      l.filter(col("l_shipdate") <= lit("2000-12-01"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-          dsum(col("l_quantity")).as("sum_qty"),
-          dsum(col("l_extendedprice")).as("sum_base_price"),
-          sum(discPrice(col("l_extendedprice"), col("l_discount")))
-            .cast(DoubleType).as("sum_disc_price"),
-          sum(d2(col("l_extendedprice")) *
-              ((lit(1) - col("l_discount")) * (lit(1) + col("l_tax"))).cast(dec4))
-            .cast(DoubleType).as("sum_charge"),
-          count(lit(1)).as("count_order"))
-        .write.format("noop").mode("overwrite").save()
+      val (a, b) = pairs.unzip
+      def conf(c: Seq[(String, String)]) =
+        Json.str(if (c.isEmpty) "-" else c.map { case (k, v) => s"$k=$v" }.mkString(";"))
+      println(Seq(
+        "query" -> Json.str(q.name), "reps" -> args.reps.toString,
+        "conf_a" -> conf(args.confA), "conf_b" -> conf(args.confB),
+        "a_s" -> a.mkString("[", ",", "]"), "b_s" -> b.mkString("[", ",", "]"),
+        "a_median_s" -> median(a).toString, "b_median_s" -> median(b).toString,
+        "a_wins" -> pairs.count { case (x, y) => x < y }.toString,
+        "b_wins" -> pairs.count { case (x, y) => y < x }.toString
+      ).map { case (k, v) => s"${Json.str(k)}:$v" }.mkString("{", ",", "}"))
     }
     spark.stop()
   }
