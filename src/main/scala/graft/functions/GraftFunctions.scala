@@ -71,15 +71,13 @@ object GraftFunctions {
         else ThetaSketches.DefaultNominal).toAggregateExpression() }
   )
 
+  /** Idempotent: SparkEntry calls it on every query, so a function the
+    * session already holds is left as it is (re-registering replaces it
+    * and logs a WARN per function), and a rule class already present is
+    * not added again.
+    */
   def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    builders.foreach { case (name, builder) =>
-      registry.registerFunction(
-        FunctionIdentifier(name),
-        new ExpressionInfo("graft.functions", name),
-        builder)
-    }
-    // idempotent per rule class: SparkEntry re-registers on every query
+    registerMissing(spark, builders)
     def missing[T](have: Seq[T], built: Seq[T]): Seq[T] =
       built.filterNot(b => have.exists(_.getClass == b.getClass))
     val ex = spark.experimental
@@ -95,13 +93,19 @@ object GraftFunctions {
     * whole-registry precondition on it would break callers that never
     * touched GraftSession/GraftExtensions. Idempotent.
     */
-  def ensureLn(spark: SparkSession): Unit = {
+  def ensureLn(spark: SparkSession): Unit =
+    registerMissing(spark, builders.filter(_._1 == "graft_ln"))
+
+  private def registerMissing(spark: SparkSession,
+      fns: Seq[(String, Seq[Expression] => Expression)]): Unit = {
     val registry = spark.sessionState.functionRegistry
-    if (!registry.functionExists(FunctionIdentifier("graft_ln")))
-      registry.registerFunction(
-        FunctionIdentifier("graft_ln"),
-        new ExpressionInfo("graft.functions", "graft_ln"),
-        (args: Seq[Expression]) => PortableLn(args(0)))
+    fns.foreach { case (name, builder) =>
+      if (!registry.functionExists(FunctionIdentifier(name)))
+        registry.registerFunction(
+          FunctionIdentifier(name),
+          new ExpressionInfo("graft.functions", name),
+          builder)
+    }
   }
 
   // Column-API wrappers (require register() / GraftExtensions on the session).

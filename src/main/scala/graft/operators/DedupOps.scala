@@ -281,13 +281,11 @@ object DedupOps {
   final val Bands = 16
   final val RowsPerBand = NumPerm / Bands
 
-  /** Hot-bucket cap: a NEAR-IDENTICAL cluster of n docs puts n rows in the
-    * same (band, key) bucket -> O(n^2) candidates. Buckets past the cap are
-    * dropped (they carry cluster structure, not pair signal — massive
-    * exact-dup clusters should be collapsed by exact dedup first); the
-    * remaining bands still recall ordinary near-dup pairs.
-    */
+  /** Hot-bucket cap of the sketch families ([[Banding.capBuckets]]). */
   final val MaxBucket = 100L
+
+  /** Bucket key of the MinHash band rows ([[bandRows]]). */
+  private[graft] val BandKey = Seq("band", "bkey")
 
   /** Engine-portable 32-bit shingle hash — the leading 8 hex chars of
     * md5 as a long, identical to [[graft.functions.Md5Basis.h32]] and to
@@ -324,29 +322,6 @@ object DedupOps {
     */
   private def bkeyCol(rows: Seq[Column], md5Parity: Boolean): Column =
     if (md5Parity) md5bkey(rows) else xxhash64(rows: _*)
-
-  /** Drop rows in overflowing buckets. Hot buckets are few by construction,
-    * so the overflow list broadcasts.
-    */
-  private[graft] def pruneHotBuckets(exploded: DataFrame, keys: Seq[String]): DataFrame = {
-    val hot = exploded.groupBy(keys.map(col): _*)
-      .agg(count(lit(1)).as("bsz"))
-      .filter(col("bsz") > MaxBucket)
-      .select(keys.map(col): _*)
-    exploded.join(broadcast(hot), keys, "left_anti")
-  }
-  // NOTE (r17, measured negative result): replacing the bucket self-joins
-  // below with a grouped in-bucket pair expansion (one exchange: groupBy
-  // the bucket key, array_sort(collect_list(id)), explode the i < j
-  // combinations) produces the identical pair set but measured ~25%
-  // SLOWER on the bench corpus in a same-JVM interleaved A/B
-  // (OPTIMIZATION_r17.md, "Tried, measured, REVERTED" — candidate stage
-  // 1.05 s self-join vs 1.39 s grouped, full query 1.23 vs 1.57): the
-  // persisted pruned frame broadcasts locally, making the join map-side and
-  // shuffle-free, while the grouped form always pays a full hash exchange
-  // plus an object aggregate. At cluster scale AQE replaces the broadcast
-  // with the sort-merge join every Spark LSH runs — the self-join is the
-  // scale-ADAPTIVE shape, not a local-only trick.
 
   /** MinHash-LSH near-dup: candidates from band-bucket join, verified with
     * exact Jaccard on the (few) candidates via array_intersect.
@@ -390,37 +365,16 @@ object DedupOps {
     // signature are computed BEFORE the persist and the string arrays are
     // DROPPED, so the cached frame (the thing that must fit at corpus
     // scale) holds only longs — ~5x smaller than caching the strings.
-    val sh = raw
-      .select(col("doc_id"),
-        transform(col("shs"), s => h32col(s, md5Parity)).as("hsh"),
-        GraftFunctions.graftMinHashSig(col("shs"), md5Parity).as("sig"))
+    val sh = minhashSigsFrom(raw, md5Parity)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val bandKeys = (0 until Bands).map { b =>
-      val rows = (0 until RowsPerBand).map(r => col("sig").getItem(b * RowsPerBand + r))
-      struct(lit(b).as("band"), bkeyCol(rows, md5Parity).as("bkey"))
-    }
-    val exploded = sh
-      .select(col("doc_id"), explode(array(bandKeys: _*)).as("bk"))
-      .select(col("doc_id"), col("bk.band").as("band"), col("bk.bkey").as("bkey"))
-    // the bucket SELF-JOIN is deliberate (r17 re-measured): grouped
-    // in-bucket pair expansion (collect_list + combination explode) was
-    // tried and is ~25% slower on the bench corpus — the persisted pruned
-    // frame broadcasts here, making the join map-side, and at cluster
-    // scale AQE falls back to the sort-merge join every Spark LSH runs
-    val pruned = pruneHotBuckets(exploded, Seq("band", "bkey"))
+    val pruned = Banding.capBuckets(bandRows(sh, md5Parity = md5Parity), BandKey, MaxBucket)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cands = pruned.as("a")
-      .join(pruned.as("b"),
-        col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
-      .distinct()
-    val pairs = cands
-      .join(sh.select(col("doc_id").as("d1"), col("hsh").as("hsh1")), "d1")
-      .join(sh.select(col("doc_id").as("d2"), col("hsh").as("hsh2")), "d2")
-      .withColumn("common", size(array_intersect(col("hsh1"), col("hsh2"))))
-      .withColumn("jaccard", col("common").cast(DoubleType) /
-        (size(col("hsh1")) + size(col("hsh2")) - col("common")).cast(DoubleType))
+    val cands = Banding.selfCandidates(pruned, BandKey, "doc_id",
+      col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
+    val pairs = Banding.hashedJaccard(cands
+        .join(sh.select(col("doc_id").as("d1"), col("hsh").as("hsh1")), "d1")
+        .join(sh.select(col("doc_id").as("d2"), col("hsh").as("hsh2")), "d2"),
+        "hsh1", "hsh2")
       .filter(col("jaccard") >= 0.7)
       .select("d1", "d2", "jaccard")
       .orderBy("d1", "d2")
@@ -446,16 +400,6 @@ object DedupOps {
     .withColumn("sh64", GraftFunctions.graftSimHash64(col("toks"), md5Parity))
     .select("doc_id", "sh64")
 
-  /** Pigeonhole banding of fingerprints: 4 x 16-bit chunks — any pair at
-    * hamming <= 3 shares at least one chunk.
-    */
-  private def simhashBands(df: DataFrame): DataFrame =
-    df.select(col("doc_id"), col("sh64"),
-      explode(array((0 until 4).map(i =>
-        struct(lit(i).as("band"),
-          shiftrightunsigned(col("sh64"), i * 16).bitwiseAND(lit(0xFFFFL)).as("chunk"))): _*)).as("bk"))
-      .select(col("doc_id"), col("sh64"), col("bk.band").as("band"), col("bk.chunk").as("chunk"))
-
   /** `capped = false` skips the hot-bucket prune — the 4 x 16-bit
     * pigeonhole banding is then LOSSLESS for hamming <= 3 (any pair with
     * <= 3 differing bits shares an identical chunk), which is what makes
@@ -470,17 +414,13 @@ object DedupOps {
     // SimHash64 map pass (the expensive part) ran four times
     val d = simhashFps(documents, md5Parity)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val banded = simhashBands(d)
-    val pruned = (if (capped) pruneHotBuckets(banded, Seq("band", "chunk"))
+    val banded = Banding.pigeonhole16(d, "sh64")
+    val pruned = (if (capped) Banding.capBuckets(banded, Banding.PigeonholeKey, MaxBucket)
       else banded)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    pruned.as("a")
-      .join(pruned.as("b"),
-        col("a.band") === col("b.band") && col("a.chunk") === col("b.chunk") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"),
+    Banding.selfCandidates(pruned, Banding.PigeonholeKey, "doc_id",
+        col("a.doc_id").as("d1"), col("b.doc_id").as("d2"),
         bit_count(col("a.sh64").bitwiseXOR(col("b.sh64"))).as("hamming"))
-      .distinct()
       .filter(col("hamming") <= 3)
       .orderBy("d1", "d2")
   }
@@ -498,6 +438,17 @@ object DedupOps {
       val pow = java.math.BigInteger.valueOf(16L).pow(len - 1 - i)
       s"(strpos('0123456789abcdef', substring($mCol, ${start + i}, 1)) - 1) * $pow"
     }.mkString("(", " + ", ")")
+
+  /** The oracles' hot-bucket cap, written apart from
+    * [[Banding.capBuckets]] (the reference the gate checks it against):
+    * `bsz` sizes each (band, `key`) bucket of the CTE `src`, and `pb`
+    * keeps the `src` rows whose bucket holds at most [[MaxBucket]] rows.
+    */
+  private def sqlBucketCap(src: String, key: String): String =
+    s"""bsz AS (SELECT band, $key, COUNT(*) AS n FROM $src GROUP BY band, $key),
+       |pb AS (SELECT $src.* FROM $src
+       |       JOIN bsz ON $src.band = bsz.band AND $src.$key = bsz.$key
+       |       WHERE bsz.n <= $MaxBucket)""".stripMargin
 
   /** Shared CTE chain `sh` -> `hv` (doc_id, 32-bit shingle hash) ->
     * `sig` (doc_id, 64-value signature list) -> `bands` (doc_id, band,
@@ -525,6 +476,16 @@ object DedupOps {
        |nsh AS (SELECT doc_id, COUNT(*) AS n FROM hv GROUP BY doc_id)""".stripMargin
   }
 
+  /** [[sqlMinhashCtes]] plus the capped bucket self-join `cand` (d1 <
+    * d2): the replay of the doc-grain minhash candidate stage.
+    */
+  private def sqlMinhashCands: String =
+    s"""$sqlMinhashCtes,
+       |${sqlBucketCap("bands", "bkey")},
+       |cand AS (SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
+       |         FROM pb a JOIN pb b ON a.band = b.band AND a.bkey = b.bkey
+       |           AND a.doc_id < b.doc_id)""".stripMargin
+
   /** Verify-join fragment over candidate pairs (`cand` with columns
     * aliased d1/d2): distinct-common-hash count (array_intersect
     * semantics) + Jaccard on the hashed shingle multiset sizes.
@@ -541,14 +502,7 @@ object DedupOps {
        |       WHERE CAST(common AS DOUBLE) / CAST(n1.n + n2.n - common AS DOUBLE) >= 0.7)""".stripMargin
 
   val minhashOracle: String =
-    s"""WITH $sqlMinhashCtes,
-       |bsz AS (SELECT band, bkey, COUNT(*) AS n FROM bands GROUP BY band, bkey),
-       |pb AS (SELECT bands.doc_id, bands.band, bands.bkey FROM bands
-       |       JOIN bsz ON bands.band = bsz.band AND bands.bkey = bsz.bkey
-       |       WHERE bsz.n <= $MaxBucket),
-       |cand AS (SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
-       |         FROM pb a JOIN pb b ON a.band = b.band AND a.bkey = b.bkey
-       |           AND a.doc_id < b.doc_id),
+    s"""WITH $sqlMinhashCands,
        |${sqlMinhashVerify("d1", "d2")}
        |SELECT d1, d2, jaccard FROM jp ORDER BY d1, d2""".stripMargin
 
@@ -560,10 +514,7 @@ object DedupOps {
     s"""WITH $sqlMinhashCtes,
        |cb AS (SELECT * FROM bands WHERE doc_id % 5 <> 0),
        |bb AS (SELECT * FROM bands WHERE doc_id % 5 = 0),
-       |bsz AS (SELECT band, bkey, COUNT(*) AS n FROM cb GROUP BY band, bkey),
-       |pb AS (SELECT cb.doc_id, cb.band, cb.bkey FROM cb
-       |       JOIN bsz ON cb.band = bsz.band AND cb.bkey = bsz.bkey
-       |       WHERE bsz.n <= $MaxBucket),
+       |${sqlBucketCap("cb", "bkey")},
        |cand AS (SELECT DISTINCT b.doc_id AS d1, c.doc_id AS d2
        |         FROM pb c JOIN bb b ON c.band = b.band AND c.bkey = b.bkey),
        |${sqlMinhashVerify("batch_doc", "corpus_doc")}
@@ -595,10 +546,7 @@ object DedupOps {
 
   val simhashOracle: String =
     s"""WITH $sqlSimhashCtes,
-       |bsz AS (SELECT band, chunk, COUNT(*) AS n FROM bands GROUP BY band, chunk),
-       |pb AS (SELECT bands.* FROM bands
-       |       JOIN bsz ON bands.band = bsz.band AND bands.chunk = bsz.chunk
-       |       WHERE bsz.n <= $MaxBucket)
+       |${sqlBucketCap("bands", "chunk")}
        |SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2,
        |  CAST(bit_count(xor(a.w_lo, b.w_lo)) + bit_count(xor(a.w_hi, b.w_hi)) AS INT) AS hamming
        |FROM pb a JOIN pb b ON a.band = b.band AND a.chunk = b.chunk
@@ -610,10 +558,7 @@ object DedupOps {
     s"""WITH $sqlSimhashCtes,
        |cb AS (SELECT * FROM bands WHERE doc_id % 5 <> 0),
        |bb AS (SELECT * FROM bands WHERE doc_id % 5 = 0),
-       |bsz AS (SELECT band, chunk, COUNT(*) AS n FROM cb GROUP BY band, chunk),
-       |pb AS (SELECT cb.* FROM cb
-       |       JOIN bsz ON cb.band = bsz.band AND cb.chunk = bsz.chunk
-       |       WHERE bsz.n <= $MaxBucket)
+       |${sqlBucketCap("cb", "chunk")}
        |SELECT DISTINCT b.doc_id AS batch_doc, c.doc_id AS corpus_doc,
        |  CAST(bit_count(xor(c.w_lo, b.w_lo)) + bit_count(xor(c.w_hi, b.w_hi)) AS INT) AS hamming
        |FROM pb c JOIN bb b ON c.band = b.band AND c.chunk = b.chunk
@@ -683,14 +628,7 @@ object DedupOps {
     * sets; counts are integers, recall/precision one IEEE division each.
     */
   val dedupEvalOracle: String =
-    s"""WITH $sqlMinhashCtes,
-       |bsz AS (SELECT band, bkey, COUNT(*) AS n FROM bands GROUP BY band, bkey),
-       |pb AS (SELECT bands.doc_id, bands.band, bands.bkey FROM bands
-       |       JOIN bsz ON bands.band = bsz.band AND bands.bkey = bsz.bkey
-       |       WHERE bsz.n <= $MaxBucket),
-       |cand AS (SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
-       |         FROM pb a JOIN pb b ON a.band = b.band AND a.bkey = b.bkey
-       |           AND a.doc_id < b.doc_id),
+    s"""WITH $sqlMinhashCands,
        |${sqlMinhashVerify("d1", "d2")},
        |tc AS (SELECT a.doc_id AS d1, b.doc_id AS d2, COUNT(DISTINCT a.h) AS common
        |       FROM hv a JOIN hv b ON a.h = b.h AND a.doc_id < b.doc_id
@@ -743,20 +681,9 @@ object DedupOps {
       try {
         val rows = Seq(2, 4, 8).map { r =>
           val b = NumPerm / r
-          val bandKeys = (0 until b).map { i =>
-            val vals = (0 until r).map(j => col("sig").getItem(i * r + j))
-            struct(lit(i).as("band"), md5bkey(vals).as("bkey"))
-          }
-          val exploded = sig
-            .select(col("doc_id"), explode(array(bandKeys: _*)).as("bk"))
-            .select(col("doc_id"), col("bk.band").as("band"),
-              col("bk.bkey").as("bkey"))
-          val cands = exploded.as("a")
-            .join(exploded.as("b"),
-              col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
-                col("a.doc_id") < col("b.doc_id"))
-            .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
-            .distinct()
+          val cands = Banding.selfCandidates(
+              bandRows(sig, md5Parity = true, rows = r), BandKey, "doc_id",
+              col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
             .withColumn("__c", lit(1L))
           cands.join(truth, Seq("d1", "d2"), "full_outer")
             .agg(coalesce(sum("__c"), lit(0L)).as("n_cand"),
@@ -827,8 +754,11 @@ object DedupOps {
     * by construction (the cap only removes band rows), so precision is
     * structurally 1 and not reported. Same scale caveat as the Jaccard
     * eval: the uncapped truth side is the eval's cost — sample at 100 TB.
-    * Same caching note as [[dedupEval]]: pipeline caches are kept by
-    * design; clear between corpora in a long-lived session.
+    * Caching differs from [[dedupEval]], which materializes eagerly and
+    * releases its caches: this result is lazy, and each [[simHashPairsOn]]
+    * leg pins its own fingerprint and band caches after the action, so a
+    * long-lived session clears them (`spark.catalog.clearCache()`)
+    * between corpora.
     */
   def simhashEval(s: SparkSession, dir: String): DataFrame =
     simhashEvalOn(Tables.t(s, dir, "documents"))
@@ -851,10 +781,7 @@ object DedupOps {
        |       FROM bands a JOIN bands b ON a.band = b.band AND a.chunk = b.chunk
        |         AND a.doc_id < b.doc_id
        |       WHERE bit_count(xor(a.w_lo, b.w_lo)) + bit_count(xor(a.w_hi, b.w_hi)) <= 3),
-       |bsz AS (SELECT band, chunk, COUNT(*) AS n FROM bands GROUP BY band, chunk),
-       |pb AS (SELECT bands.* FROM bands
-       |       JOIN bsz ON bands.band = bsz.band AND bands.chunk = bsz.chunk
-       |       WHERE bsz.n <= $MaxBucket),
+       |${sqlBucketCap("bands", "chunk")},
        |gp AS (SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
        |       FROM pb a JOIN pb b ON a.band = b.band AND a.chunk = b.chunk
        |         AND a.doc_id < b.doc_id
@@ -889,15 +816,11 @@ object DedupOps {
       materialize: Boolean = true): DataFrame = {
     val sh = minhashSigs(documents)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val pruned = pruneHotBuckets(bandRows(sh), Seq("band", "bkey"))
+    val pruned = Banding.capBuckets(bandRows(sh), BandKey, MaxBucket)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val cands = pruned.as("a")
-        .join(pruned.as("b"),
-          col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
-            col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
-        .distinct()
+      val cands = Banding.selfCandidates(pruned, BandKey, "doc_id",
+        col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
       val t = Tables.spread(documents).select(col("doc_id"), col("text"))
       val out = cands
         .join(t.select(col("doc_id").as("d1"), col("text").as("t1")), "d1")
@@ -926,14 +849,7 @@ object DedupOps {
     * verify is integer-exact and the normalization one IEEE division.
     */
   val editDistOracle: String =
-    s"""WITH $sqlMinhashCtes,
-       |bsz AS (SELECT band, bkey, COUNT(*) AS n FROM bands GROUP BY band, bkey),
-       |pb AS (SELECT bands.doc_id, bands.band, bands.bkey FROM bands
-       |       JOIN bsz ON bands.band = bsz.band AND bands.bkey = bsz.bkey
-       |       WHERE bsz.n <= $MaxBucket),
-       |cand AS (SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
-       |         FROM pb a JOIN pb b ON a.band = b.band AND a.bkey = b.bkey
-       |           AND a.doc_id < b.doc_id),
+    s"""WITH $sqlMinhashCands,
        |v AS (SELECT c.d1, c.d2,
        |        CAST(levenshtein(x.text, y.text) AS BIGINT) AS edit_dist,
        |        CAST(levenshtein(x.text, y.text) AS DOUBLE) /
@@ -1463,16 +1379,9 @@ object DedupOps {
         transform(col("shs"), x => h32col(x, md5Parity)).as("hsh"),
         GraftFunctions.graftMinHashSig(col("shs"), md5Parity).as("sig"))
 
-  /** Exploded (doc_id, chunk_idx, band, bkey) band-bucket rows. */
-  private def chunkBands(sh: DataFrame, md5Parity: Boolean): DataFrame = {
-    val bandKeys = (0 until Bands).map { b =>
-      val rows = (0 until RowsPerBand).map(r => col("sig").getItem(b * RowsPerBand + r))
-      struct(lit(b).as("band"), bkeyCol(rows, md5Parity).as("bkey"))
-    }
-    sh.select(col("doc_id"), col("chunk_idx"), explode(array(bandKeys: _*)).as("bk"))
-      .select(col("doc_id"), col("chunk_idx"),
-        col("bk.band").as("band"), col("bk.bkey").as("bkey"))
-  }
+  /** Exploded (doc_id, band, bkey, chunk_idx) band-bucket rows. */
+  private def chunkBands(sh: DataFrame, md5Parity: Boolean): DataFrame =
+    bandRows(sh, keep = Seq("chunk_idx"), md5Parity = md5Parity)
 
   def chunkMinhashOn(docs: DataFrame, md5Parity: Boolean = false): DataFrame =
     // one-shot gated form: the two internal caches stay pinned until the
@@ -1493,24 +1402,18 @@ object DedupOps {
     // expensive map work) would run four times
     val sh = chunkSigs(docs, md5Parity)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val pruned = pruneHotBuckets(chunkBands(sh, md5Parity), Seq("band", "bkey"))
+    val pruned = Banding.capBuckets(chunkBands(sh, md5Parity), BandKey, MaxBucket)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cands = pruned.as("a")
-      .join(pruned.as("b"),
-        col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("d1"), col("a.chunk_idx").as("c1"),
-        col("b.doc_id").as("d2"), col("b.chunk_idx").as("c2"))
-      .distinct()
-    val pairs = cands
-      .join(sh.select(col("doc_id").as("d1"), col("chunk_idx").as("c1"),
-        col("chunk_fp").as("fp1"), col("hsh").as("hsh1")), Seq("d1", "c1"))
-      .join(sh.select(col("doc_id").as("d2"), col("chunk_idx").as("c2"),
-        col("chunk_fp").as("fp2"), col("hsh").as("hsh2")), Seq("d2", "c2"))
-      .filter(col("fp1") =!= col("fp2"))
-      .withColumn("common", size(array_intersect(col("hsh1"), col("hsh2"))))
-      .withColumn("jaccard", col("common").cast(DoubleType) /
-        (size(col("hsh1")) + size(col("hsh2")) - col("common")).cast(DoubleType))
+    val cands = Banding.selfCandidates(pruned, BandKey, "doc_id",
+      col("a.doc_id").as("d1"), col("a.chunk_idx").as("c1"),
+      col("b.doc_id").as("d2"), col("b.chunk_idx").as("c2"))
+    val pairs = Banding.hashedJaccard(cands
+        .join(sh.select(col("doc_id").as("d1"), col("chunk_idx").as("c1"),
+          col("chunk_fp").as("fp1"), col("hsh").as("hsh1")), Seq("d1", "c1"))
+        .join(sh.select(col("doc_id").as("d2"), col("chunk_idx").as("c2"),
+          col("chunk_fp").as("fp2"), col("hsh").as("hsh2")), Seq("d2", "c2"))
+        .filter(col("fp1") =!= col("fp2")),
+        "hsh1", "hsh2")
       .filter(col("jaccard") >= 0.7)
       .select("d1", "c1", "d2", "c2", "jaccard")
       .orderBy("d1", "c1", "d2", "c2")
@@ -1569,10 +1472,7 @@ object DedupOps {
     */
   private def sqlChunkMinhashPairCtes: String =
     s"""$sqlChunkMinhashCtes,
-       |bsz AS (SELECT band, bkey, COUNT(*) AS n FROM bands GROUP BY band, bkey),
-       |pb AS (SELECT bands.doc_id, bands.chunk_idx, bands.band, bands.bkey
-       |       FROM bands JOIN bsz ON bands.band = bsz.band AND bands.bkey = bsz.bkey
-       |       WHERE bsz.n <= $MaxBucket),
+       |${sqlBucketCap("bands", "bkey")},
        |cand AS (SELECT DISTINCT a.doc_id AS d1, a.chunk_idx AS c1,
        |           b.doc_id AS d2, b.chunk_idx AS c2
        |         FROM pb a JOIN pb b ON a.band = b.band AND a.bkey = b.bkey
@@ -1715,24 +1615,20 @@ object DedupOps {
       batch: DataFrame, md5Parity: Boolean): DataFrame = {
     val bs = chunkSigs(batch, md5Parity)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val pruned = pruneHotBuckets(corpusBands, Seq("band", "bkey"))
-    val cands = pruned.as("c")
-      .join(broadcast(chunkBands(bs, md5Parity).as("b")),
-        col("c.band") === col("b.band") && col("c.bkey") === col("b.bkey"))
-      .select(col("b.doc_id").as("batch_doc"), col("b.chunk_idx").as("batch_idx"),
-        col("c.doc_id").as("corpus_doc"), col("c.chunk_idx").as("corpus_idx"))
-      .distinct()
-    cands
-      .join(broadcast(bs.select(col("doc_id").as("batch_doc"),
-        col("chunk_idx").as("batch_idx"), col("chunk_fp").as("fp_b"),
-        col("hsh").as("hsh_b"))), Seq("batch_doc", "batch_idx"))
-      .join(cs.select(col("doc_id").as("corpus_doc"),
-        col("chunk_idx").as("corpus_idx"), col("chunk_fp").as("fp_c"),
-        col("hsh").as("hsh_c")), Seq("corpus_doc", "corpus_idx"))
-      .filter(col("fp_b") =!= col("fp_c"))
-      .withColumn("common", size(array_intersect(col("hsh_b"), col("hsh_c"))))
-      .withColumn("jaccard", col("common").cast(DoubleType) /
-        (size(col("hsh_b")) + size(col("hsh_c")) - col("common")).cast(DoubleType))
+    val cands = Banding.probeCandidates(
+      Banding.capBuckets(corpusBands, BandKey, MaxBucket),
+      broadcast(chunkBands(bs, md5Parity)), BandKey,
+      col("b.doc_id").as("batch_doc"), col("b.chunk_idx").as("batch_idx"),
+      col("c.doc_id").as("corpus_doc"), col("c.chunk_idx").as("corpus_idx"))
+    Banding.hashedJaccard(cands
+        .join(broadcast(bs.select(col("doc_id").as("batch_doc"),
+          col("chunk_idx").as("batch_idx"), col("chunk_fp").as("fp_b"),
+          col("hsh").as("hsh_b"))), Seq("batch_doc", "batch_idx"))
+        .join(cs.select(col("doc_id").as("corpus_doc"),
+          col("chunk_idx").as("corpus_idx"), col("chunk_fp").as("fp_c"),
+          col("hsh").as("hsh_c")), Seq("corpus_doc", "corpus_idx"))
+        .filter(col("fp_b") =!= col("fp_c")),
+        "hsh_b", "hsh_c")
       .filter(col("jaccard") >= 0.7)
       .select("batch_doc", "batch_idx", "corpus_doc", "corpus_idx", "jaccard")
       .orderBy("batch_doc", "batch_idx", "corpus_doc", "corpus_idx")
@@ -1746,10 +1642,7 @@ object DedupOps {
     s"""WITH $sqlChunkMinhashCtes,
        |cb AS (SELECT * FROM bands WHERE doc_id % 5 <> 0),
        |bb AS (SELECT * FROM bands WHERE doc_id % 5 = 0),
-       |bsz AS (SELECT band, bkey, COUNT(*) AS n FROM cb GROUP BY band, bkey),
-       |pb AS (SELECT cb.doc_id, cb.chunk_idx, cb.band, cb.bkey FROM cb
-       |       JOIN bsz ON cb.band = bsz.band AND cb.bkey = bsz.bkey
-       |       WHERE bsz.n <= $MaxBucket),
+       |${sqlBucketCap("cb", "bkey")},
        |cand AS (SELECT DISTINCT b.doc_id AS batch_doc, b.chunk_idx AS batch_idx,
        |           c.doc_id AS corpus_doc, c.chunk_idx AS corpus_idx
        |         FROM pb c JOIN bb b ON c.band = b.band AND c.bkey = b.bkey),
@@ -1967,7 +1860,7 @@ object DedupOps {
         GraftFunctions.graftMinHashSig(col("shs"), md5Parity).as("sig") +: keep.map(col): _*)
 
   /** [[minhashSigs]] over a pre-shingled (doc_id, shs) frame (the
-    * [[lshSweepOn]] sharing point; no keep-columns variant needed there).
+    * [[minHashLshPairsFrom]] and [[lshSweepOn]] sharing point).
     */
   private[graft] def minhashSigsFrom(raw: DataFrame,
       md5Parity: Boolean = false): DataFrame =
@@ -1975,12 +1868,14 @@ object DedupOps {
       transform(col("shs"), s => h32col(s, md5Parity)).as("hsh"),
       GraftFunctions.graftMinHashSig(col("shs"), md5Parity).as("sig"))
 
-  /** (doc_id, band, bkey) band-bucket rows of a signature frame. */
+  /** (doc_id, band, bkey) band-bucket rows of a signature frame, `rows`
+    * signature values per band (the production geometry by default).
+    */
   private[graft] def bandRows(df: DataFrame, keep: Seq[String] = Nil,
-      md5Parity: Boolean = false): DataFrame = {
-    val bandKeys = (0 until Bands).map { b =>
-      val rows = (0 until RowsPerBand).map(r => col("sig").getItem(b * RowsPerBand + r))
-      struct(lit(b).as("band"), bkeyCol(rows, md5Parity).as("bkey"))
+      md5Parity: Boolean = false, rows: Int = RowsPerBand): DataFrame = {
+    val bandKeys = (0 until NumPerm / rows).map { b =>
+      val vals = (0 until rows).map(r => col("sig").getItem(b * rows + r))
+      struct(lit(b).as("band"), bkeyCol(vals, md5Parity).as("bkey"))
     }
     df.select(col("doc_id") +: explode(array(bandKeys: _*)).as("bk") +: keep.map(col): _*)
       .select(col("doc_id") +: col("bk.band").as("band") +:
@@ -2000,12 +1895,10 @@ object DedupOps {
     // basis must match the corpus side the caller computed/stored
     val batchSig = minhashSigs(batch, md5Parity = md5Parity)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val pruned = pruneHotBuckets(corpusBands, Seq("band", "bkey"))
-    val cands = pruned.as("c")
-      .join(broadcast(bandRows(batchSig, md5Parity = md5Parity).as("b")),
-        col("c.band") === col("b.band") && col("c.bkey") === col("b.bkey"))
-      .select(col("b.doc_id").as("batch_doc"), col("c.doc_id").as("corpus_doc"))
-      .distinct()
+    val cands = Banding.probeCandidates(
+      Banding.capBuckets(corpusBands, BandKey, MaxBucket),
+      broadcast(bandRows(batchSig, md5Parity = md5Parity)), BandKey,
+      col("b.doc_id").as("batch_doc"), col("c.doc_id").as("corpus_doc"))
     // verify resolution: when the signature table is a BUCKETED serving
     // layout (writeMinHashIndex), the candidate PAIRS — bounded by
     // |batch| x MaxBucket — are collected ONCE (two longs per pair, the
@@ -2048,11 +1941,9 @@ object DedupOps {
         else corpusSig
       case _ => corpusSig
     }
-    sigSide.select(col("doc_id").as("corpus_doc"), col("hsh").as("hsh_c"))
-      .join(broadcast(candB), "corpus_doc")
-      .withColumn("common", size(array_intersect(col("hsh_b"), col("hsh_c"))))
-      .withColumn("jaccard", col("common").cast(DoubleType) /
-        (size(col("hsh_b")) + size(col("hsh_c")) - col("common")).cast(DoubleType))
+    Banding.hashedJaccard(sigSide
+        .select(col("doc_id").as("corpus_doc"), col("hsh").as("hsh_c"))
+        .join(broadcast(candB), "corpus_doc"), "hsh_b", "hsh_c")
       .filter(col("jaccard") >= 0.7)
       .select("batch_doc", "corpus_doc", "jaccard")
       .orderBy("batch_doc", "corpus_doc")
@@ -2222,20 +2113,18 @@ object DedupOps {
       md5Parity: Boolean = false): DataFrame = {
     val batchFp = simhashFps(batch, md5Parity)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // corpus fingerprints persist because pruneHotBuckets consumes the
+    // corpus fingerprints persist because the bucket cap consumes the
     // band frame twice (hot-bucket count + anti-join) — unpersisted, the
     // expensive tokenize+SimHash64 corpus pass would run twice; the band
     // re-explode off the cache is cheap (same rationale as simHashPairsOn)
     val corpusFp = simhashFps(corpus, md5Parity)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val corpusBands = pruneHotBuckets(simhashBands(corpusFp),
-      Seq("band", "chunk"))
-    corpusBands.as("c")
-      .join(broadcast(simhashBands(batchFp).as("b")),
-        col("c.band") === col("b.band") && col("c.chunk") === col("b.chunk"))
-      .select(col("b.doc_id").as("batch_doc"), col("c.doc_id").as("corpus_doc"),
+    Banding.probeCandidates(
+        Banding.capBuckets(Banding.pigeonhole16(corpusFp, "sh64"),
+          Banding.PigeonholeKey, MaxBucket),
+        broadcast(Banding.pigeonhole16(batchFp, "sh64")), Banding.PigeonholeKey,
+        col("b.doc_id").as("batch_doc"), col("c.doc_id").as("corpus_doc"),
         bit_count(col("c.sh64").bitwiseXOR(col("b.sh64"))).as("hamming"))
-      .distinct()
       .filter(col("hamming") <= 3)
       .orderBy("batch_doc", "corpus_doc")
   }

@@ -137,13 +137,11 @@ object MultimodalOps {
           expr(s"transform(sequence(1, octet_length(payload) - ${frameLen - 1}, $stride), " +
             s"i -> substring(payload, i, $frameLen))"))
           .otherwise(expr("CAST(array() AS array<binary>)")))).as("frame"))
-    val kept = frames.join(
-      frames.groupBy("frame").agg(count(lit(1)).as("df"))
-        .filter(col("df") <= dfCap).select("frame"),
-      Seq("frame"), "left_semi")
-    kept.as("a").join(kept.as("b"),
-        col("a.frame") === col("b.frame") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
+    val frameKey = Seq("frame")
+    // frames are distinct per asset, so each shared frame is one pair row
+    Banding.selfPairs(Banding.capBuckets(frames, frameKey, dfCap), frameKey, "doc_id",
+        col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
+      .groupBy("d1", "d2")
       .agg(count(lit(1)).as("n_shared"))
       .filter(col("n_shared") >= minShared)
       .orderBy("d1", "d2")
@@ -256,31 +254,24 @@ object MultimodalOps {
     phashPairsOf(if (materialize) h0.localCheckpoint(true) else h0)
   }
 
+  /** Hot-band cap of the pHash pigeonhole banding. */
+  private val PhashCap = 50L
+
   /** The banded hamming ≤ 3 pairing tail over an 8-byte hash frame
     * (doc_id, ph): pigeonhole 4×16-bit bands, hot-band df cap, verify on
     * the banded candidates only — shared by the corpus pairing query and
     * the jittered-twin gate.
     */
-  private def phashPairsOf(h: DataFrame): DataFrame = {
-    val cap = 50L
-    val bands = h.select(col("doc_id"), col("ph"),
-        explode(expr("sequence(0, 3)")).as("b"))
-      .withColumn("v", expr("shiftright(ph, CAST(b * 16 AS INT)) & 65535"))
-    val kept = bands.join(
-      bands.groupBy("b", "v").agg(count(lit(1)).as("df"))
-        .filter(col("df") <= cap).select("b", "v"),
-      Seq("b", "v"), "left_semi")
-    kept.as("a").join(kept.as("c"),
-        col("a.b") === col("c.b") && col("a.v") === col("c.v") &&
-          col("a.doc_id") < col("c.doc_id"))
-      .select(col("a.doc_id").as("d1"), col("c.doc_id").as("d2"),
-        col("a.ph").as("h1"), col("c.ph").as("h2"))
-      .distinct()
+  private def phashPairsOf(h: DataFrame): DataFrame =
+    Banding.selfCandidates(
+        Banding.capBuckets(Banding.pigeonhole16(h, "ph"),
+          Banding.PigeonholeKey, PhashCap),
+        Banding.PigeonholeKey, "doc_id", col("a.doc_id").as("d1"), col("b.doc_id").as("d2"),
+        col("a.ph").as("h1"), col("b.ph").as("h2"))
       .withColumn("hamming", expr("CAST(bit_count(h1 ^ h2) AS BIGINT)"))
       .filter(col("hamming") <= 3)
       .select("d1", "d2", "hamming")
       .orderBy("d1", "d2")
-  }
 
   /** DuckDB replay of [[phashDedup]]: bytes from hex, the SAME strided
     * picks / integer mean-centering / fixed-point DCT (basis literals
@@ -540,24 +531,15 @@ object MultimodalOps {
     keyframeDedupOn(asBinaryTable(s, dir))
 
   def keyframeDedupOn(bin: DataFrame): DataFrame = {
-    val cap = 50L
     val keyframes = sceneFold(bin).filter(col("cut"))
       .select(col("doc_id"), col("fi"), col("ph"))
       .localCheckpoint(true)
-    val bands = keyframes.select(col("doc_id"), col("fi"), col("ph"),
-        explode(expr("sequence(0, 3)")).as("b"))
-      .withColumn("v", expr("shiftright(ph, CAST(b * 16 AS INT)) & 65535"))
-    val kept = bands.join(
-      bands.groupBy("b", "v").agg(count(lit(1)).as("df"))
-        .filter(col("df") <= cap).select("b", "v"),
-      Seq("b", "v"), "left_semi")
-    kept.as("a").join(kept.as("c"),
-        col("a.b") === col("c.b") && col("a.v") === col("c.v") &&
-          col("a.doc_id") < col("c.doc_id"))
-      .select(col("a.doc_id").as("d1"), col("c.doc_id").as("d2"),
-        col("a.fi").as("f1"), col("c.fi").as("f2"),
-        col("a.ph").as("h1"), col("c.ph").as("h2"))
-      .distinct()
+    Banding.selfCandidates(
+        Banding.capBuckets(Banding.pigeonhole16(keyframes, "ph"),
+          Banding.PigeonholeKey, PhashCap),
+        Banding.PigeonholeKey, "doc_id", col("a.doc_id").as("d1"), col("b.doc_id").as("d2"),
+        col("a.fi").as("f1"), col("b.fi").as("f2"),
+        col("a.ph").as("h1"), col("b.ph").as("h2"))
       .filter(expr("bit_count(h1 ^ h2) <= 3"))
       .groupBy("d1", "d2")
       .agg(count(lit(1)).as("n_shared"))

@@ -89,13 +89,13 @@ object StreamingDedup {
     */
   def prepareNearDupIndex(s: org.apache.spark.sql.SparkSession,
       indexPath: String): (DataFrame, DataFrame) = {
-    import graft.operators.DedupOps
+    import graft.operators.{Banding, DedupOps}
     // a basis-mismatched index would make every stream probe silently
     // match nothing — same guard as the batch probe/append paths
     DedupOps.requireIndexBasis(s, indexPath)
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val bands = DedupOps.pruneHotBuckets(
-        s.read.parquet(s"$indexPath/bands"), Seq("band", "bkey"))
+    val bands = Banding.capBuckets(
+        s.read.parquet(s"$indexPath/bands"), DedupOps.BandKey, DedupOps.MaxBucket)
       .withColumnRenamed("doc_id", "corpus_doc")
       .persist(lvl)
     // read the signature table through its bucketed registration when the
@@ -134,18 +134,15 @@ object StreamingDedup {
   def nearDupStream(docs: DataFrame, bandsIdx: DataFrame, sigsIdx: DataFrame,
       watermark: String, threshold: Double,
       broadcastBands: Boolean): DataFrame = {
-    import graft.operators.DedupOps
+    import graft.operators.{Banding, DedupOps}
     val streamBands = DedupOps.bandRows(
       DedupOps.minhashSigs(docs, keep = Seq("ts")).withWatermark("ts", watermark),
       keep = Seq("ts", "hsh"))
-    streamBands
-      .join(if (broadcastBands) broadcast(bandsIdx) else bandsIdx, Seq("band", "bkey"))
-      .select(col("doc_id"), col("ts"), col("hsh"), col("corpus_doc"))
+    val pairs = Banding.probePairs(
+        if (broadcastBands) broadcast(bandsIdx) else bandsIdx, streamBands, DedupOps.BandKey,
+        col("b.doc_id"), col("b.ts"), col("b.hsh"), col("c.corpus_doc"))
       .dropDuplicatesWithinWatermark("doc_id", "corpus_doc")
-      .join(sigsIdx, Seq("corpus_doc"))
-      .withColumn("common", size(array_intersect(col("hsh"), col("hsh_c"))))
-      .withColumn("jaccard", col("common").cast("double") /
-        (size(col("hsh")) + size(col("hsh_c")) - col("common")).cast("double"))
+    Banding.hashedJaccard(pairs.join(sigsIdx, Seq("corpus_doc")), "hsh", "hsh_c")
       .filter(col("jaccard") >= threshold)
       .select("doc_id", "ts", "corpus_doc", "jaccard")
   }
@@ -263,13 +260,13 @@ object StreamingDedup {
       */
     def probe(batch: DataFrame, threshold: Double = 0.7,
         broadcastBands: Boolean = false): DataFrame = {
-      import graft.operators.DedupOps
+      import graft.operators.{Banding, DedupOps}
       val st = snapshot()
       val (bands, sigs, lookup) = (st.bands, st.sigs, st.sigLookup)
-      def cands() = DedupOps.bandRows(DedupOps.minhashSigs(batch), keep = Seq("hsh"))
-        .join(if (broadcastBands) broadcast(bands) else bands, Seq("band", "bkey"))
-        .select(col("doc_id"), col("hsh"), col("corpus_doc"))
-        .distinct()
+      def cands() = Banding.probeCandidates(
+        if (broadcastBands) broadcast(bands) else bands,
+        DedupOps.bandRows(DedupOps.minhashSigs(batch), keep = Seq("hsh")),
+        DedupOps.BandKey, col("b.doc_id"), col("b.hsh"), col("c.corpus_doc"))
       val sigSide = lookup.flatMap { case (raw, key, n) =>
         graft.sources.Bucketed
           .boundedKeys(cands(), "corpus_doc", graft.sources.Bucketed.lookupMax(s))
@@ -283,11 +280,7 @@ object StreamingDedup {
             slice.select(col("doc_id").as("corpus_doc"), col("hsh").as("hsh_c"))
           }
       }.getOrElse(sigs)
-      cands()
-        .join(sigSide, Seq("corpus_doc"))
-        .withColumn("common", size(array_intersect(col("hsh"), col("hsh_c"))))
-        .withColumn("jaccard", col("common").cast("double") /
-          (size(col("hsh")) + size(col("hsh_c")) - col("common")).cast("double"))
+      Banding.hashedJaccard(cands().join(sigSide, Seq("corpus_doc")), "hsh", "hsh_c")
         .filter(col("jaccard") >= threshold)
         .select("doc_id", "corpus_doc", "jaccard")
     }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStag
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeLike}
 
-import graft.{GraftSession, Registry}
+import graft.{GraftSession, Registry, Verify}
 
 /** Exchange-reuse / rescan audit: run every registry query to completion
   * (driving the dataset's OWN QueryExecution, so AQE settles on its FINAL
@@ -52,14 +52,29 @@ object Audit {
     (below ++ subs).map(tally).foldLeft(self)(_ + _)
   }
 
+  /** The queries named after the scale-factor directory (separate or
+    * comma-joined arguments; none = every query), checked by
+    * [[graft.Verify.select]] so an unknown name is rejected up front.
+    */
+  private[graft] def selection(args: Seq[String],
+      known: Set[String]): Either[String, Set[String]] =
+    Verify.select(known, if (args.length > 1) Some(args.drop(1).mkString(",")) else None)
+
+  /** `Audit <sfDir> [query…]`: exits 2 on an unknown query name before any
+    * query runs, and 1 when any audited query failed.
+    */
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val only = if (args.length > 1) args.drop(1).toSet else Set.empty[String]
+    val names = selection(args.toSeq, Registry.all.map(_.name).toSet) match {
+      case Right(n) => n
+      case Left(err) => System.err.println(s"[audit] $err"); sys.exit(2)
+    }
     val spark = GraftSession.get("audit")
     spark.sparkContext.setLogLevel("ERROR")
     val bigTables = Seq("lineitem", "orders", "events", "documents", "embeddings")
     println(f"${"query"}%-28s ex  reused  cached  multi-scanned-big-tables")
-    Registry.all.filter(q => only.isEmpty || only(q.name)).foreach { q =>
+    var failed = 0
+    Registry.all.filter(q => names(q.name)).foreach { q =>
       try {
         val df = q.build(spark, dir)
         // drive THIS df's QueryExecution (a sink write would run a
@@ -77,9 +92,14 @@ object Audit {
         println(f"${q.name}%-28s ${c.exchanges}%2d  ${c.reused}%6d  ${c.cached}%6d  $rescans")
         spark.catalog.clearCache()
       } catch { case e: Throwable =>
+        failed += 1
         println(f"${q.name}%-28s FAILED: ${e.toString.take(100)}")
       }
     }
     spark.stop()
+    if (failed > 0) {
+      System.err.println(s"[audit] $failed of ${names.size} queries failed")
+      sys.exit(1)
+    }
   }
 }

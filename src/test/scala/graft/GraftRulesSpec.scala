@@ -36,9 +36,18 @@ class GraftRulesSpec extends SparkSpecBase {
   }
 
   test("register twice adds no duplicate rule or strategy") {
+    val registry = spark.sessionState.functionRegistry
+    def infos = registry.listFunction().filter(_.funcName.startsWith("graft_"))
+      .map(f => f.funcName -> registry.lookupFunction(f).get).toMap
     functions.GraftFunctions.register(spark)
+    val first = infos
     functions.GraftFunctions.register(spark)
     assert(sessionRules == ruleClasses)
     assert(sessionStrategies == Seq(IntervalJoinStrategy.getClass))
+    // a registered function is left in place, not replaced (a replacement
+    // logs a WARN per function on every query)
+    val second = infos
+    assert(first.size == 24 && second.keySet == first.keySet)
+    first.foreach { case (name, info) => assert(second(name) eq info, name) }
   }
 }

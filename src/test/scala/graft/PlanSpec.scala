@@ -692,4 +692,48 @@ class PlanSpec extends SparkSpecBase {
     assert("Window".r.findAllIn(p).size >= 2,
       s"expected the lag and cumsum windows over the shared sort:\n$p")
   }
+
+  test("minhash lsh: candidates are a self-join of the cached pruned frame, never a grouped expansion") {
+    // the r17 decision as a checked fact: the bucket self-join over the
+    // persisted pruned band rows (doc_id, band, bkey) is the candidate
+    // stage; the reverted collect_list expansion (an object aggregate)
+    // must not come back
+    import org.apache.spark.sql.catalyst.expressions.aggregate.CollectList
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    def nodes(p: SparkPlan, intoCaches: Boolean): Seq[SparkPlan] = {
+      val below = p match {
+        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+        case s: QueryStageExec => Seq(s.plan)
+        case r: ReusedExchangeExec => Seq(r.child)
+        case c: InMemoryTableScanExec => if (intoCaches) Seq(c.relation.cachedPlan) else Nil
+        case o => o.children
+      }
+      p +: below.flatMap(nodes(_, intoCaches))
+    }
+    def readsPruned(side: SparkPlan): Boolean = nodes(side, intoCaches = false).exists {
+      case c: InMemoryTableScanExec =>
+        c.relation.output.map(_.name).toSet == Set("doc_id", "band", "bkey")
+      case _ => false
+    }
+    val df = graft.operators.DedupOps.minHashLsh(spark, sf0001)
+    try {
+      df.collect() // adaptive plan finalizes
+      val root = df.queryExecution.executedPlan
+      val bucketJoins = nodes(root, intoCaches = false).collect { case j: BaseJoinExec =>
+        j }.filter(j => j.children.forall(readsPruned))
+      assert(bucketJoins.size == 1,
+        s"expected one join whose two sides both read the cached pruned frame:\n$root")
+      assert(bucketJoins.head.leftKeys.map(_.toString).exists(_.startsWith("band#")) &&
+        bucketJoins.head.leftKeys.map(_.toString).exists(_.startsWith("bkey#")),
+        s"the candidate join must key on (band, bkey): ${bucketJoins.head}")
+      val all = nodes(root, intoCaches = true)
+      assert(!all.exists(_.isInstanceOf[ObjectHashAggregateExec]), root)
+      assert(!all.exists(_.expressions.exists(_.exists(_.isInstanceOf[CollectList]))), root)
+    } finally spark.catalog.clearCache()
+  }
 }

@@ -25,6 +25,16 @@ class ToolArgsSpec extends AnyFunSuite {
     assert(Verify.select(known, Some("")).isLeft)
   }
 
+  test("Audit selects every query by default, else the named ones, and rejects an unknown one") {
+    assert(Audit.selection(Seq("/data/sf"), known) == Right(known))
+    assert(Audit.selection(Seq("/data/sf", "q1_pricing_summary", "doc_minhash_lsh"), known) ==
+      Right(Set("q1_pricing_summary", "doc_minhash_lsh")))
+    assert(Audit.selection(Seq("/data/sf", "q1_pricing_summary,doc_minhash_lsh"), known) ==
+      Right(Set("q1_pricing_summary", "doc_minhash_lsh")))
+    assert(Audit.selection(Seq("/data/sf", "doc_minhash_lsh", "nope"), known)
+      .left.toOption.exists(_.contains("unknown query nope")))
+  }
+
   private def exp(reps: String, queries: String, a: String, b: String) =
     Exp.parse(Seq("/data/sf", reps, queries, a, b), known)
 
