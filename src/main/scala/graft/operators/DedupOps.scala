@@ -29,9 +29,20 @@ object DedupOps {
     * legs ([[dedupEvalOn]], [[lshSweepOn]]) so the corpus is shingled
     * once instead of once per leg.
     */
-  private[graft] def rawShingles(df: DataFrame): DataFrame =
-    withShingles(df)
-      .select(col("doc_id"), col("shs"))
+  private[graft] def rawShingles(df: DataFrame): DataFrame = shingleRows(df, Nil)
+
+  /** (doc_id, `keep`..., shs) for the documents with at least one shingle,
+    * each document shingled ONCE. `shs` comes out of a generator rather
+    * than a Project: Catalyst pushes a filter on a projected alias below
+    * the Project and substitutes the alias, so `size(shs) > 0` over a
+    * `withColumn("shs", …)` shingled every document twice (once for the
+    * filter, once for the column). A filter on a generator's output stays
+    * above it — the [[graft.streaming.StreamingAnomaly.parse]] shape.
+    */
+  private def shingleRows(df: DataFrame, keep: Seq[String]): DataFrame =
+    Tables.spread(df)
+      .select(col("doc_id") +: keep.map(col) :+ inline(array(struct(
+        GraftFunctions.graftWordShingles(col("text"), 5).as("shs")))): _*)
       .filter(size(col("shs")) > 0)
 
   private val sqlShingles: String =
@@ -583,11 +594,12 @@ object DedupOps {
     * measured figure generalizes; the production pipeline itself never
     * runs all-pairs.
     *
-    * Caching: both sides ride their pipelines' keep-cached intermediates
-    * (reused several times WITHIN one eval), and because the one-row
-    * result materializes eagerly, every internal cache is released before
-    * return (r16 ADVICE) — a long-lived session can loop corpus evals
-    * without accumulating corpus-scale cached frames.
+    * Eager: the call runs the whole eval and returns its one row as a
+    * local frame ([[collected]]). Both sides ride their pipelines'
+    * keep-cached intermediates (reused several times WITHIN one eval),
+    * and every internal cache is released before return (r16 ADVICE) — a
+    * long-lived session can loop corpus evals without accumulating
+    * corpus-scale cached frames.
     */
   def dedupEval(s: SparkSession, dir: String): DataFrame =
     dedupEvalOn(Tables.t(s, dir, "documents"))
@@ -598,7 +610,7 @@ object DedupOps {
     // the eval's single most expensive map stage, duplicated. The shared
     // frame is persisted once; each leg still persists only its own
     // derived columns (capped/sorted sets vs hsh+sig longs). The one-row
-    // result materializes EAGERLY (the lshSweepOn convention, r17) so
+    // result is collected EAGERLY (the lshSweepOn convention, r17) so
     // every internal cache is released before return instead of pinning
     // two corpus-scale frames until the session clears them.
     val raw = rawShingles(documents)
@@ -609,19 +621,28 @@ object DedupOps {
         .select(col("d1"), col("d2"), lit(1L).as("__t"))
       val lsh = lshPairs
         .select(col("d1"), col("d2"), lit(1L).as("__l"))
-      truth.join(lsh, Seq("d1", "d2"), "full_outer")
+      val eval = truth.join(lsh, Seq("d1", "d2"), "full_outer")
         .agg(coalesce(sum("__t"), lit(0L)).as("n_true"),
           coalesce(sum("__l"), lit(0L)).as("n_lsh"),
           coalesce(sum(col("__t") * col("__l")), lit(0L)).as("n_hit"))
         .select(col("n_true"), col("n_lsh"), col("n_hit"),
           (col("n_hit").cast(DoubleType) / col("n_true").cast(DoubleType)).as("recall"),
           (col("n_hit").cast(DoubleType) / col("n_lsh").cast(DoubleType)).as("precision"))
-        .localCheckpoint(true)
+      collected(eval)
     } finally {
       releaseLsh()
       raw.unpersist()
     }
   }
+
+  /** `df`'s few result rows, collected to the driver and served back as a
+    * local frame with the same schema: an eval's one-row (or one-row-per-
+    * geometry) result outlives the caches it was built from without
+    * pinning executor blocks — a `localCheckpoint` is lost with its
+    * executor, and then the released inputs cannot rebuild it.
+    */
+  private def collected(df: DataFrame): DataFrame =
+    df.sparkSession.createDataFrame(df.collectAsList(), df.schema)
 
   /** Oracle: the md5-basis LSH replay ([[minhashOracle]]'s pipeline) full-
     * outer-joined against an exact >= 0.7 truth over the hashed shingle
@@ -662,7 +683,8 @@ object DedupOps {
     * r = 4 row is the production geometry's uncapped anchor. Scale
     * caveat as [[dedupEvalOn]]: the truth side is the eval's cost —
     * sample the corpus at 100 TB. Signatures and truth each compute ONCE
-    * across the three geometries (persisted, dropped before return).
+    * across the three geometries (persisted, dropped before return); the
+    * call is eager, as [[dedupEvalOn]] is.
     */
   def lshSweep(s: SparkSession, dir: String): DataFrame =
     lshSweepOn(Tables.t(s, dir, "documents"))
@@ -694,8 +716,7 @@ object DedupOps {
               (col("n_hit").cast(DoubleType) / col("n_true").cast(DoubleType))
                 .as("recall"))
         }
-        rows.reduce(_ unionByName _).orderBy("rows_per_band")
-          .localCheckpoint(true)
+        collected(rows.reduce(_ unionByName _).orderBy("rows_per_band"))
       } finally truth.unpersist()
     } finally sig.unpersist()
     } finally raw.unpersist()
@@ -1849,12 +1870,11 @@ object DedupOps {
   /** Per-doc index rows — doc_id, hashed shingle set, MinHash signature —
     * shared by the one-shot, index-backed and streaming probe paths.
     * `keep` columns ride along (e.g. the stream's event-time column).
+    * One shingle pass per document ([[shingleRows]]).
     */
   private[graft] def minhashSigs(df: DataFrame, keep: Seq[String] = Nil,
       md5Parity: Boolean = false): DataFrame =
-    withShingles(df)
-      .select(col("doc_id") +: col("shs") +: keep.map(col): _*)
-      .filter(size(col("shs")) > 0)
+    shingleRows(df, keep)
       .select(col("doc_id") +:
         transform(col("shs"), s => h32col(s, md5Parity)).as("hsh") +:
         GraftFunctions.graftMinHashSig(col("shs"), md5Parity).as("sig") +: keep.map(col): _*)

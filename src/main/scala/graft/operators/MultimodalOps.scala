@@ -138,8 +138,15 @@ object MultimodalOps {
             s"i -> substring(payload, i, $frameLen))"))
           .otherwise(expr("CAST(array() AS array<binary>)")))).as("frame"))
     val frameKey = Seq("frame")
+    // the capped frame rows feed both sides of the self-join: persisted,
+    // the strided frames and the hot-frame count are built once, not once
+    // per side. Like the DedupOps pruned band rows, the cache lives as long
+    // as the lazy result; an eager localCheckpoint that released it
+    // measured slower than no cache at all
+    val capped = Banding.capBuckets(frames, frameKey, dfCap)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // frames are distinct per asset, so each shared frame is one pair row
-    Banding.selfPairs(Banding.capBuckets(frames, frameKey, dfCap), frameKey, "doc_id",
+    Banding.selfPairs(capped, frameKey, "doc_id",
         col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
       .groupBy("d1", "d2")
       .agg(count(lit(1)).as("n_shared"))

@@ -41,26 +41,34 @@ object Tables {
   }
 
   /** The driver's tables are single-file/single-row-group parquet, which
-    * caps scan parallelism at 1 task no matter the split size. When (and
-    * only when) the scan yields far fewer partitions than the cluster has
-    * cores, insert one cheap round-robin shuffle so downstream map-heavy
-    * work parallelizes. On a real multi-row-group / multi-file 100 TB
-    * layout this is a no-op.
+    * caps scan parallelism at 1 task no matter the split size. When the
+    * scan has fewer files than the cluster has cores ([[spreadTo]]),
+    * insert one cheap round-robin shuffle so downstream map-heavy work
+    * parallelizes. On a real multi-row-group / multi-file 100 TB layout
+    * this is a no-op.
     */
-  def spread(df: DataFrame): DataFrame = {
+  def spread(df: DataFrame): DataFrame =
     // streaming frames have no file listing (inputFiles throws) and their
-    // parallelism is the source's concern — pass them through untouched
-    if (df.isStreaming) return df
-    val target = df.sparkSession.sparkContext.defaultParallelism
-    // File count is the static proxy for scan parallelism: the degenerate
-    // layout this guards against is "one single-row-group file". Checking
+    // parallelism is the source's concern — pass them through untouched.
+    // File count is the static proxy for scan parallelism: checking
     // inputFiles stays on the driver's file index — unlike df.rdd, it never
     // materializes the physical plan's RDD lineage just to count partitions.
-    // Non-file-backed frames (ranges, memory tables) report 0 files and are
-    // already parallel — never reshuffle those.
-    val files = df.inputFiles.length
-    if (files > 0 && files * 2 < target) df.repartition(target) else df
-  }
+    if (df.isStreaming) df
+    else spreadTo(df.inputFiles.length, df.sparkSession.sparkContext.defaultParallelism)
+      .fold(df)(df.repartition)
+
+  /** The partition count [[spread]] shuffles a scan of `files` files to on
+    * `target` cores, or None to leave it alone. The rule is
+    * `files < target`: any file-backed scan with fewer files than cores
+    * leaves a core idle through its map stages. A stricter `files * 2 <
+    * target` leaves one file on 2 cores unspread, and there, at sf0.1 on
+    * local[2] (4-core VM), `doc_minhash_lsh`'s signature stage ran as one
+    * 370 ms task while the other core's only task waited on its cache
+    * block. Non-file-backed frames (ranges, memory tables) report 0 files
+    * and are already parallel — never reshuffle those.
+    */
+  private[graft] def spreadTo(files: Int, target: Int): Option[Int] =
+    if (files > 0 && files < target) Some(target) else None
 
   /** Register every table as a temp view (for spark.sql callers). */
   def registerAll(spark: SparkSession, dir: String): Unit =

@@ -11,6 +11,34 @@ class PlanSpec extends SparkSpecBase {
   private def plan(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.executedPlan.toString
 
+  import org.apache.spark.sql.execution.SparkPlan
+
+  /** Every node of an executed plan, walked by node type through AQE's
+    * wrappers, query stages and reused exchanges; with `intoCaches`, also
+    * through the plans of the cached relations it reads.
+    */
+  private def nodes(p: SparkPlan, intoCaches: Boolean = false): Seq[SparkPlan] = {
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    val below = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case s: QueryStageExec => Seq(s.plan)
+      case r: ReusedExchangeExec => Seq(r.child)
+      case c: InMemoryTableScanExec => if (intoCaches) Seq(c.relation.cachedPlan) else Nil
+      case o => o.children
+    }
+    p +: below.flatMap(nodes(_, intoCaches))
+  }
+
+  /** A join of any strategy. `CartesianProductExec` is a `BaseJoinExec`
+    * in Spark 4.1; "join detector: a cartesian product counts as a join"
+    * fails if that ever stops holding.
+    */
+  private def isJoin(n: SparkPlan): Boolean =
+    n.isInstanceOf[org.apache.spark.sql.execution.joins.BaseJoinExec] ||
+      n.nodeName.contains("Join")
+
   test("q1: shipdate filter reaches the parquet scan; schema pruned") {
     val p = plan(Analytics.q1PricingSummary(spark, sf0001))
     assert(p.contains("PushedFilters: [IsNotNull(l_shipdate), LessThanOrEqual(l_shipdate"))
@@ -115,21 +143,10 @@ class PlanSpec extends SparkSpecBase {
     // string form is brittle across Spark versions (any node or expression
     // containing "Join", or an AQE header change, would flip the test
     // without a behavior change)
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import org.apache.spark.sql.execution.FileSourceScanExec
     import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
-    def nodes(p: SparkPlan): Seq[SparkPlan] = {
-      val below = p match {
-        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-          Seq(a.executedPlan)
-        case s: org.apache.spark.sql.execution.adaptive.QueryStageExec => Seq(s.plan)
-        case o => o.children
-      }
-      p +: below.flatMap(nodes)
-    }
     val ns = nodes(df.queryExecution.executedPlan)
-    assert(!ns.exists(n => n.isInstanceOf[BaseJoinExec] ||
-      n.nodeName.contains("Join")), "single-pass CEP must not join")
+    assert(!ns.exists(isJoin), "single-pass CEP must not join")
     assert(ns.count(_.isInstanceOf[FileSourceScanExec]) == 1,
       "events must be scanned once")
     assert(!ns.exists(_.isInstanceOf[BroadcastExchangeExec]),
@@ -387,7 +404,25 @@ class PlanSpec extends SparkSpecBase {
     val p = plan(df)
     assert(p.contains("EqualTo(p_brand,Brand#4)"),
       "brand filter must reach the part scan")
-    assert(!p.contains("CartesianProduct"), "no cartesian anywhere in q17")
+    df.collect() // adaptive plan finalizes
+    assert(!nodes(df.queryExecution.executedPlan).exists(
+      _.isInstanceOf[org.apache.spark.sql.execution.joins.CartesianProductExec]),
+      "no cartesian anywhere in q17")
+  }
+
+  test("join detector: a cartesian product counts as a join") {
+    import org.apache.spark.sql.execution.joins.CartesianProductExec
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prior = spark.conf.getOption(key)
+    // no broadcast side: an unconditioned inner join plans as a cartesian product
+    spark.conf.set(key, "-1")
+    try {
+      val df = spark.range(3).toDF("a").crossJoin(spark.range(3).toDF("b"))
+      df.collect()
+      val ns = nodes(df.queryExecution.executedPlan)
+      assert(ns.exists(_.isInstanceOf[CartesianProductExec]), df.queryExecution.executedPlan)
+      assert(ns.exists(isJoin))
+    } finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
   test("mad outliers: counts-then-rank — exactly two raw-event scans (counts + flag)") {
@@ -699,22 +734,9 @@ class PlanSpec extends SparkSpecBase {
     // stage; the reverted collect_list expansion (an object aggregate)
     // must not come back
     import org.apache.spark.sql.catalyst.expressions.aggregate.CollectList
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
     import org.apache.spark.sql.execution.joins.BaseJoinExec
-    def nodes(p: SparkPlan, intoCaches: Boolean): Seq[SparkPlan] = {
-      val below = p match {
-        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-        case s: QueryStageExec => Seq(s.plan)
-        case r: ReusedExchangeExec => Seq(r.child)
-        case c: InMemoryTableScanExec => if (intoCaches) Seq(c.relation.cachedPlan) else Nil
-        case o => o.children
-      }
-      p +: below.flatMap(nodes(_, intoCaches))
-    }
     def readsPruned(side: SparkPlan): Boolean = nodes(side, intoCaches = false).exists {
       case c: InMemoryTableScanExec =>
         c.relation.output.map(_.name).toSet == Set("doc_id", "band", "bkey")
@@ -734,6 +756,35 @@ class PlanSpec extends SparkSpecBase {
       val all = nodes(root, intoCaches = true)
       assert(!all.exists(_.isInstanceOf[ObjectHashAggregateExec]), root)
       assert(!all.exists(_.expressions.exists(_.exists(_.isInstanceOf[CollectList]))), root)
+    } finally spark.catalog.clearCache()
+  }
+
+  test("minhash lsh: each document is shingled once on the way to the signature cache") {
+    // a filter on size(shs) over a projected shingle column is pushed below
+    // the Project with the alias substituted, which shingles every document
+    // twice; the generator shape keeps one shingle pass
+    import graft.functions.WordShingles
+    import org.apache.spark.sql.execution.FilterExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    def shingles(n: SparkPlan): Int =
+      n.expressions.map(_.collect { case w: WordShingles => w }.size).sum
+    val df = graft.operators.DedupOps.minHashLsh(spark, sf0001)
+    try {
+      df.collect() // adaptive plans finalize, cached relations included
+      val all = nodes(df.queryExecution.executedPlan, intoCaches = true)
+      val sigCaches = all.collect {
+        case c: InMemoryTableScanExec
+            if c.relation.output.map(_.name).toSet == Set("doc_id", "hsh", "sig") =>
+          c.relation.cachedPlan
+      }.distinct
+      assert(sigCaches.size == 1, s"expected one signature cache:\n${df.queryExecution.executedPlan}")
+      val path = nodes(sigCaches.head)
+      assert(path.map(shingles).sum == 1,
+        s"expected one graft_word_shingles on the scan -> sh path:\n${sigCaches.head}")
+      assert(!all.exists {
+        case f: FilterExec => f.condition.exists(_.isInstanceOf[WordShingles])
+        case _ => false
+      }, s"a filter re-shingles the documents:\n${sigCaches.head}")
     } finally spark.catalog.clearCache()
   }
 }

@@ -77,4 +77,22 @@ class TablesSpec extends SparkSpecBase {
     assert(got.schema("l_shipdate").dataType == TimestampType)
     assert(got.select(unix_micros(col("l_shipdate"))).head.getLong(0) == wantUs)
   }
+
+  test("spreadTo: a scan with fewer files than cores spreads to one partition per core") {
+    assert(Tables.spreadTo(files = 1, target = 2) == Some(2))
+    assert(Tables.spreadTo(files = 1, target = 4) == Some(4))
+    assert(Tables.spreadTo(files = 4, target = 4) == None)
+    // non-file frames report 0 files and are left alone at any core count
+    for (n <- Seq(1, 2, 4, 32)) assert(Tables.spreadTo(files = 0, target = n) == None)
+  }
+
+  test("spread passes a streaming frame and a non-file frame through untouched") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val stream = MemoryStream[Long].toDF()
+    assert(Tables.spread(stream) eq stream)
+    val range = spark.range(10).toDF()
+    assert(Tables.spread(range) eq range)
+  }
 }
