@@ -1,11 +1,54 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
+
+/** The loop-event buffer every CEP fold keeps: a growable ring of
+  * timestamps in arrival order, appended at the tail, expired at the head
+  * and cleared on a match — no per-event copying. A stream refills it
+  * from the key's state list and stores it back ([[toList]]).
+  */
+final class LongRing(cap: Int) {
+  private var buf = new Array[Long](cap)
+  private var head = 0
+  private var tail = 0 // exclusive
+
+  def size: Int = tail - head
+  /** The `i`-th live entry, oldest first. */
+  def apply(i: Int): Long = buf(head + i)
+  def popHead(): Unit = head += 1
+  def clear(): Unit = { head = 0; tail = 0 }
+  /** Drops the entries more than `withinUs` before `now`: too old to
+    * start any match that ends at `now` or later.
+    */
+  def dropOlder(now: Long, withinUs: Long): Unit =
+    while (head < tail && now - buf(head) > withinUs) head += 1
+  def push(t: Long): Unit = {
+    if (tail == buf.length) {
+      // compact ONLY when it reclaims at least half the buffer —
+      // amortized O(1) per event. Compacting on any head > 0 looks
+      // harmless but degrades to one O(window) arraycopy PER EVENT
+      // when the alive window sits within a few slots of capacity
+      // (each event expires ~one head entry, tail re-hits capacity
+      // immediately, and the buffer never grows)
+      val into = if (head >= buf.length / 2) buf else new Array[Long](buf.length * 2)
+      System.arraycopy(buf, head, into, 0, tail - head)
+      buf = into
+      tail -= head; head = 0
+    }
+    buf(tail) = t
+    tail += 1
+  }
+  def toList: List[Long] = List.tabulate(size)(apply)
+}
+
+object LongRing {
+  /** A ring sized for `n` events, capped at 64Ki (a hot key grows it). */
+  def sized(n: Int): LongRing = new LongRing(math.min(math.max(n, 8), 1 << 16))
+}
 
 /** The relaxed-CEP per-key NFA fold as ONE native expression over the
   * key's sorted (t, id, isn) event array — the hot loop of
@@ -63,61 +106,44 @@ case class CepFold(child: Expression, minTimes: Long, withinUs: Long,
 
 object CepFold {
 
+  /** Folds one run (`isn = false`) or terminator event at `t` into `live`,
+    * the within-alive run-event ring, and appends a completed match
+    * (s, e, n, c) to `out`. Batch ([[compute]]) and stream
+    * (`CepPattern.detectStream`, from the key's state) both run this
+    * step, in (t, id) order with neutral events left out.
+    */
+  def step(live: LongRing, t: Long, isn: Boolean, min: Int, withinUs: Long,
+      greedy: Boolean, optional: Boolean,
+      out: scala.collection.mutable.ArrayBuffer[Any]): Unit = {
+    live.dropOlder(t, withinUs)
+    if (!isn) live.push(t)
+    else if (live.size >= min) {
+      val c = if (greedy) live.size else min
+      out += new GenericInternalRow(Array[Any](live(0), live(c - 1), t, c.toLong))
+      live.clear() // skip-past-last: discard every partial
+    } else if (optional) {
+      // no branch reaches min: the optional loop matches EMPTY (zero
+      // repetitions, the terminator alone); skip-past-last then
+      // consumes the sub-min partials that plain mode carries
+      out += new GenericInternalRow(Array[Any](t, t, t, 0L))
+      live.clear()
+    }
+    // else: sub-min partials carry across (relaxed IGNORE edge)
+  }
+
   /** `arr`: array<struct<t:long, id:long, isn:boolean>> in (t, id) order.
     * Returns array<struct<s, e, n, c>> of matches.
     */
   def compute(arr: ArrayData, minTimes: Long, withinUs: Long,
       greedy: Boolean, optional: Boolean): ArrayData = {
     val n = arr.numElements()
-    val min = minTimes.toInt
-    // run-event ts buffer with a head pointer: append at tail, expire at
-    // head (within-prune), reset both on a match — no per-event copying
-    var buf = new Array[Long](math.min(math.max(n, 8), 1 << 16))
-    var head = 0
-    var tail = 0 // exclusive
+    val live = LongRing.sized(n)
     val out = scala.collection.mutable.ArrayBuffer.empty[Any]
     var i = 0
     while (i < n) {
       val row = arr.getStruct(i, 3)
-      val t = row.getLong(0)
-      val isn = row.getBoolean(2)
-      if (isn) {
-        while (head < tail && t - buf(head) > withinUs) head += 1
-        if (tail - head >= min) {
-          val c = if (greedy) tail - head else min
-          out += new GenericInternalRow(
-            Array[Any](buf(head), buf(head + c - 1), t, c.toLong))
-          head = 0; tail = 0 // skip-past-last: discard every partial
-        } else if (optional) {
-          // no branch reaches min: the optional loop matches EMPTY (zero
-          // repetitions, the terminator alone); skip-past-last then
-          // consumes the sub-min partials that plain mode carries
-          out += new GenericInternalRow(Array[Any](t, t, t, 0L))
-          head = 0; tail = 0
-        }
-        // else: sub-min partials carry across (relaxed IGNORE edge)
-      } else { // run event (callers pre-filter neutral events)
-        while (head < tail && t - buf(head) > withinUs) head += 1
-        if (tail == buf.length) {
-          // compact ONLY when it reclaims at least half the buffer —
-          // amortized O(1) per event. Compacting on any head > 0 looks
-          // harmless but degrades to one O(window) arraycopy PER EVENT
-          // when the alive window sits within a few slots of capacity
-          // (each event expires ~one head entry, tail re-hits capacity
-          // immediately, and the buffer never grows)
-          if (head >= buf.length / 2) {
-            System.arraycopy(buf, head, buf, 0, tail - head)
-            tail -= head; head = 0
-          } else {
-            val nb = new Array[Long](buf.length * 2)
-            System.arraycopy(buf, head, nb, 0, tail - head)
-            tail -= head; head = 0
-            buf = nb
-          }
-        }
-        buf(tail) = t
-        tail += 1
-      }
+      step(live, row.getLong(0), row.getBoolean(2), minTimes.toInt, withinUs,
+        greedy, optional, out)
       i += 1
     }
     new GenericArrayData(out.toArray)
@@ -145,8 +171,9 @@ object CepFold {
   *  - expiries are processed in event-time order, driven by the next
   *    arriving event; `flush = true` (the batch form — the data is
   *    complete) expires every branch still alive after the last event.
-  *    The streaming twin folds with flush = false and emits a branch's
-  *    match when a later event's timestamp passes its expiry.
+  *    The stream runs the same [[CepNegFold.step]] without the flush
+  *    and emits a branch's match when a later event's timestamp passes
+  *    its expiry.
   *
   * Output struct: (s = run start, e = last kept repetition,
   * x = s + within the expiry instant, c = min).
@@ -176,6 +203,45 @@ case class CepNegFold(child: Expression, minTimes: Long, withinUs: Long,
 
 object CepNegFold {
 
+  /** Expires every branch whose window closed strictly before `now`:
+    * heads pop in start order; a viable head (>= min reps inside its
+    * window) appends its match (s, e, x, c) to `out` and consumes entries
+    * up to its last kept repetition (skip-past-last); a sub-min head just
+    * dies. All repetitions of a branch are already in `live` when its
+    * expiry is processed (events fold in time order and expiry waits for
+    * now > s + within). The stream also calls this alone for a neutral
+    * event: its time still passes.
+    */
+  def expireBefore(live: LongRing, now: Long, min: Int, withinUs: Long,
+      out: scala.collection.mutable.ArrayBuffer[Any]): Unit =
+    while (live.size > 0 && live(0) + withinUs < now) {
+      val s = live(0)
+      if (live.size >= min && live(min - 1) <= s + withinUs) {
+        val e = live(min - 1)
+        out += new GenericInternalRow(Array[Any](s, e, s + withinUs, min.toLong))
+        // consume every entry <= e (ties at e share its timestamp and
+        // are part of the consumed prefix under skip-past-last)
+        while (live.size > 0 && live(0) <= e) live.popHead()
+      } else {
+        // sub-min, or the min-th repetition lies outside the window:
+        // the head branch dies alone; later starts keep their own
+        // (later-closing) windows
+        live.popHead()
+      }
+    }
+
+  /** Folds one loop (`isb = false`) or terminator event at `t` into
+    * `live`, appending the matches whose windows it closes. Batch
+    * ([[compute]]) and stream (`CepPattern.detectStream`, from the key's
+    * state) both run this step in (t, id) order.
+    */
+  def step(live: LongRing, t: Long, isb: Boolean, min: Int, withinUs: Long,
+      out: scala.collection.mutable.ArrayBuffer[Any]): Unit = {
+    expireBefore(live, t, min, withinUs, out)
+    // the terminator follows (relaxed) every live partial: all die
+    if (isb) live.clear() else live.push(t)
+  }
+
   /** `arr`: array<struct<t:long, id:long, isb:boolean>> in (t, id) order
     * (loop events and terminators only — neutral events are transparent
     * and pre-filtered). Returns array<struct<s, e, x, c>>.
@@ -184,187 +250,15 @@ object CepNegFold {
       flush: Boolean): ArrayData = {
     val n = arr.numElements()
     val min = minTimes.toInt
-    var buf = new Array[Long](math.min(math.max(n, 8), 1 << 16))
-    var head = 0
-    var tail = 0 // exclusive
+    val live = LongRing.sized(n)
     val out = scala.collection.mutable.ArrayBuffer.empty[Any]
-
-    // expire every branch whose window closed strictly before `now`:
-    // heads pop in start order; a viable head (>= min reps inside its
-    // window) emits and consumes entries up to its last kept repetition
-    // (skip-past-last); a sub-min head just dies. All repetitions of a
-    // branch are already buffered when its expiry is processed (events
-    // fold in time order and expiry waits for now > s + within).
-    def expireBefore(now: Long): Unit = {
-      while (head < tail && buf(head) + withinUs < now) {
-        val s = buf(head)
-        if (tail - head >= min && buf(head + min - 1) <= s + withinUs) {
-          val e = buf(head + min - 1)
-          out += new GenericInternalRow(Array[Any](s, e, s + withinUs, min.toLong))
-          // consume every entry <= e (ties at e share its timestamp and
-          // are part of the consumed prefix under skip-past-last)
-          while (head < tail && buf(head) <= e) head += 1
-        } else {
-          // sub-min, or the min-th repetition lies outside the window:
-          // the head branch dies alone; later starts keep their own
-          // (later-closing) windows
-          head += 1
-        }
-      }
-    }
-
     var i = 0
     while (i < n) {
       val row = arr.getStruct(i, 3)
-      val t = row.getLong(0)
-      val isb = row.getBoolean(2)
-      expireBefore(t)
-      if (isb) {
-        // the terminator follows (relaxed) every live partial: all die
-        head = 0; tail = 0
-      } else {
-        if (tail == buf.length) {
-          if (head >= buf.length / 2) {
-            System.arraycopy(buf, head, buf, 0, tail - head)
-            tail -= head; head = 0
-          } else {
-            val nb = new Array[Long](buf.length * 2)
-            System.arraycopy(buf, head, nb, 0, tail - head)
-            tail -= head; head = 0
-            buf = nb
-          }
-        }
-        buf(tail) = t
-        tail += 1
-      }
+      step(live, row.getLong(0), row.getBoolean(2), min, withinUs, out)
       i += 1
     }
-    if (flush) expireBefore(Long.MaxValue)
-    new GenericArrayData(out.toArray)
-  }
-}
-
-/** The THREE-stage chain fold — `A{min,} followedBy B followedBy C
-  * within w` as one native expression over the key's sorted
-  * (t, id, k) event array, k ∈ {0 = A (loop), 1 = B (middle), 2 = C
-  * (terminator)}; neutral events are pre-filtered (transparent). The
-  * same documented rules as the two-stage fold, with the stage-2 state
-  * generalized to a PENDING SET — the r12 carried-partial lesson one
-  * stage up: at a B event every viable alive start (not only the
-  * earliest) takes its first B and becomes a pending (s, e, b); a later
-  * C completes the earliest within-alive pending — which may not be the
-  * earliest-installed one, because starts age out of their windows
-  * independently — and skip-past-last clears everything. A C with no
-  * live pending is transparent (loop partials AND pendings carry).
-  * State is within-pruned: O(one window of A events) for both the loop
-  * ring and the pending set. `CepNfaSpec.replayThreeStage` is the
-  * independent partial-set interpreter this fold is fuzz-matched
-  * against, batch and streaming.
-  *
-  * Output struct: (s = run start, e = min-th repetition, b = the taken
-  * middle event's ts, n = the completing C's ts).
-  */
-case class CepFold3(child: Expression, minTimes: Long, withinUs: Long)
-    extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("s", LongType, nullable = false),
-    StructField("e", LongType, nullable = false),
-    StructField("b", LongType, nullable = false),
-    StructField("n", LongType, nullable = false))), containsNull = false)
-
-  override def prettyName: String = "graft_cep_fold3"
-
-  override protected def nullSafeEval(input: Any): Any =
-    CepFold3.compute(input.asInstanceOf[ArrayData], minTimes, withinUs)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.CepFold3.compute($c, ${minTimes}L, ${withinUs}L);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object CepFold3 {
-
-  /** `arr`: array<struct<t:long, id:long, k:int>> in (t, id) order. */
-  def compute(arr: ArrayData, minTimes: Long, withinUs: Long): ArrayData = {
-    val n = arr.numElements()
-    val min = minTimes.toInt
-    val cap0 = math.min(math.max(n, 8), 1 << 16)
-    var loop = new Array[Long](cap0)
-    var lHead = 0
-    var lTail = 0
-    // pending set (s, e, b) as parallel arrays, sorted by s (installs are
-    // monotone: only loop starts past the largest pending s are new)
-    var ps = new Array[Long](cap0)
-    var pe = new Array[Long](cap0)
-    var pb = new Array[Long](cap0)
-    var pHead = 0
-    var pTail = 0
-    val out = scala.collection.mutable.ArrayBuffer.empty[Any]
-
-    def growLoop(): Unit =
-      if (lTail == loop.length) {
-        if (lHead >= loop.length / 2) {
-          System.arraycopy(loop, lHead, loop, 0, lTail - lHead)
-          lTail -= lHead; lHead = 0
-        } else {
-          val nb = new Array[Long](loop.length * 2)
-          System.arraycopy(loop, lHead, nb, 0, lTail - lHead)
-          lTail -= lHead; lHead = 0; loop = nb
-        }
-      }
-    def growPend(): Unit =
-      if (pTail == ps.length) {
-        if (pHead >= ps.length / 2) {
-          System.arraycopy(ps, pHead, ps, 0, pTail - pHead)
-          System.arraycopy(pe, pHead, pe, 0, pTail - pHead)
-          System.arraycopy(pb, pHead, pb, 0, pTail - pHead)
-          pTail -= pHead; pHead = 0
-        } else {
-          val m = ps.length * 2
-          val (ns, ne, nb2) = (new Array[Long](m), new Array[Long](m), new Array[Long](m))
-          System.arraycopy(ps, pHead, ns, 0, pTail - pHead)
-          System.arraycopy(pe, pHead, ne, 0, pTail - pHead)
-          System.arraycopy(pb, pHead, nb2, 0, pTail - pHead)
-          pTail -= pHead; pHead = 0; ps = ns; pe = ne; pb = nb2
-        }
-      }
-
-    var i = 0
-    while (i < n) {
-      val row = arr.getStruct(i, 3)
-      val t = row.getLong(0)
-      val k = row.getInt(2)
-      // within-prune both states (a start past w of NOW can never reach C)
-      while (lHead < lTail && t - loop(lHead) > withinUs) lHead += 1
-      while (pHead < pTail && t - ps(pHead) > withinUs) pHead += 1
-      if (k == 2) { // C
-        if (pTail > pHead) {
-          out += new GenericInternalRow(
-            Array[Any](ps(pHead), pe(pHead), pb(pHead), t))
-          lHead = 0; lTail = 0; pHead = 0; pTail = 0 // skip-past-last
-        }
-      } else if (k == 1) { // B: every viable alive start takes its first b
-        val lastS = if (pTail > pHead) ps(pTail - 1) else Long.MinValue
-        var j = lHead
-        while (j <= lTail - min) {
-          if (loop(j) > lastS) {
-            growPend()
-            ps(pTail) = loop(j); pe(pTail) = loop(j + min - 1); pb(pTail) = t
-            pTail += 1
-          }
-          j += 1
-        }
-      } else { // A
-        growLoop()
-        loop(lTail) = t
-        lTail += 1
-      }
-      i += 1
-    }
+    if (flush) expireBefore(live, Long.MaxValue, min, withinUs, out)
     new GenericArrayData(out.toArray)
   }
 }
@@ -372,8 +266,17 @@ object CepFold3 {
 /** The GENERAL chain fold — `A{min,} followedBy B1 … followedBy Bm
   * followedBy C within w` for any m ≥ 1, as one native expression over
   * the key's sorted (t, id, k) event array, k ∈ {0 = A, 1..m = Bj,
-  * m+1 = C}; neutral events pre-filtered. The CepFold3 rules applied
-  * stage-by-stage, and the induction that makes that sound:
+  * m+1 = C}; neutral events pre-filtered. The same documented rules as
+  * the two-stage fold, with each middle stage's state generalized to a
+  * PENDING SET — the r12 carried-partial lesson one stage up: at a B1
+  * event every viable alive start (not only the earliest) takes its
+  * first B1 and becomes a pending (s, e, bs); each later Bj converts the
+  * stage below the same way; a C completes the earliest within-alive
+  * final pending — which may not be the earliest-installed one, because
+  * starts age out of their windows independently — and skip-past-last
+  * clears everything. A C with no live final pending is transparent
+  * (loop partials AND pendings carry). The induction that makes the
+  * stage-by-stage form sound:
   *
   *  - each pending stage's entries are installed in strictly increasing
   *    start order (stage j installs only entries whose s exceeds the
@@ -389,10 +292,10 @@ object CepFold3 {
   *
   * `CepNfaSpec.replayChain` is the independent interpreter (an explicit
   * already-taken SET instead of the monotonicity argument) this fold is
-  * fuzz-matched against, and at m = 1 it is pinned identical to
-  * [[CepFold3]]. Output: (s = run start, e = min-th repetition,
-  * bs = the m taken middle timestamps in stage order, n = the C's ts).
-  * State is within-pruned: O(one window) per stage.
+  * fuzz-matched against (`replayThreeStage` at m = 1). Output:
+  * (s = run start, e = min-th repetition, bs = the m taken middle
+  * timestamps in stage order, n = the C's ts). State is within-pruned:
+  * O(one window) per stage.
   */
 case class CepFoldChain(child: Expression, minTimes: Long, withinUs: Long,
     nMids: Int) extends UnaryExpression {
@@ -424,9 +327,9 @@ object CepFoldChain {
   /** One pending stage: parallel growable ring buffers for (s, e) plus
     * the bs taken so far (bs stored as an array per entry — entries are
     * O(window) and m is tiny, so per-entry allocation is acceptable
-    * here; the 2/3-stage hot paths keep their allocation-free folds).
+    * here; the loop ring stays allocation-free per event).
     */
-  private final class Stage(cap: Int) {
+  private[graft] final class Stage(cap: Int) {
     var s = new Array[Long](cap)
     var e = new Array[Long](cap)
     var bs = new Array[Array[Long]](cap)
@@ -460,76 +363,96 @@ object CepFoldChain {
     }
   }
 
+  /** One key's chain state: the loop ring and one pending stage per
+    * middle, sized for `n` events.
+    */
+  private[graft] final class State(n: Int, nMids: Int) {
+    val loop: LongRing = LongRing.sized(n)
+    val stages: Array[Stage] =
+      Array.fill(nMids)(new Stage(math.min(math.max(n, 8), 1 << 12)))
+
+    /** Drops every loop entry and pending start more than `w` before `t`. */
+    def prune(t: Long, w: Long): Unit = {
+      loop.dropOlder(t, w)
+      var j = 0
+      while (j < nMids) { stages(j).prune(t, w); j += 1 }
+    }
+
+    /** A C at `t`: completes the earliest final-stage pending, if any,
+      * and clears every stage (skip-past-last).
+      */
+    def complete(t: Long, out: scala.collection.mutable.ArrayBuffer[Any]): Unit = {
+      val fin = stages(nMids - 1)
+      if (fin.size > 0) {
+        out += new GenericInternalRow(Array[Any](
+          fin.s(fin.head), fin.e(fin.head),
+          new GenericArrayData(fin.bs(fin.head)), t))
+        loop.clear()
+        var j = 0
+        while (j < nMids) { stages(j).clear(); j += 1 }
+      }
+    }
+
+    /** A B1 at `t`: every viable loop start not yet in stage 1 takes it.
+      * Loop starts and each stage's entries are in start order, so the
+      * entries past the target stage's last start are a suffix: found
+      * from the end, at the cost of the installs alone.
+      */
+    def convertLoop(t: Long, min: Int): Unit = {
+      val dst = stages(0)
+      val bar = dst.lastS
+      val last = loop.size - min
+      var p = last
+      while (p >= 0 && loop(p) > bar) p -= 1
+      while (p < last) {
+        p += 1
+        dst.install(loop(p), loop(p + min - 1), Array(t))
+      }
+    }
+
+    /** A Bk at `t`, k >= 2: every entry of stage k - 1 not yet in stage
+      * k takes it, carrying its taken middles plus `t`.
+      */
+    def convertStage(k: Int, t: Long): Unit = {
+      val (src, dst) = (stages(k - 2), stages(k - 1))
+      val bar = dst.lastS
+      var p = src.tail - 1
+      while (p >= src.head && src.s(p) > bar) p -= 1
+      while (p < src.tail - 1) {
+        p += 1
+        val nb = new Array[Long](src.bs(p).length + 1)
+        System.arraycopy(src.bs(p), 0, nb, 0, src.bs(p).length)
+        nb(nb.length - 1) = t
+        dst.install(src.s(p), src.e(p), nb)
+      }
+    }
+  }
+
+  /** Folds one event of kind `k` (0 = A, 1..m = Bk, m+1 = C) at `t` into
+    * `st`, appending a completed match (s, e, bs, n) to `out`. Batch
+    * ([[compute]]) and stream (`CepPattern.detectChainStream`, from the
+    * key's state) both run this step, in (t, id) order with neutral
+    * events left out.
+    */
+  def step(st: State, t: Long, k: Int, min: Int, withinUs: Long,
+      out: scala.collection.mutable.ArrayBuffer[Any]): Unit = {
+    st.prune(t, withinUs)
+    if (k == st.stages.length + 1) st.complete(t, out)
+    else if (k == 1) st.convertLoop(t, min)
+    else if (k >= 2) st.convertStage(k, t)
+    else st.loop.push(t) // A
+  }
+
   /** `arr`: array<struct<t:long, id:long, k:int>> in (t, id) order. */
   def compute(arr: ArrayData, minTimes: Long, withinUs: Long,
       nMids: Int): ArrayData = {
     val n = arr.numElements()
-    val min = minTimes.toInt
-    val cap0 = math.min(math.max(n, 8), 1 << 16)
-    var loop = new Array[Long](cap0)
-    var lHead = 0
-    var lTail = 0
-    val stages = Array.fill(nMids)(new Stage(math.min(cap0, 1 << 12)))
+    val st = new State(n, nMids)
     val out = scala.collection.mutable.ArrayBuffer.empty[Any]
-
-    def growLoop(): Unit =
-      if (lTail == loop.length) {
-        if (lHead >= loop.length / 2) {
-          System.arraycopy(loop, lHead, loop, 0, lTail - lHead)
-          lTail -= lHead; lHead = 0
-        } else {
-          val nb = new Array[Long](loop.length * 2)
-          System.arraycopy(loop, lHead, nb, 0, lTail - lHead)
-          lTail -= lHead; lHead = 0; loop = nb
-        }
-      }
-
     var i = 0
     while (i < n) {
       val row = arr.getStruct(i, 3)
-      val t = row.getLong(0)
-      val k = row.getInt(2)
-      while (lHead < lTail && t - loop(lHead) > withinUs) lHead += 1
-      var j = 0
-      while (j < nMids) { stages(j).prune(t, withinUs); j += 1 }
-      if (k == nMids + 1) { // C
-        val fin = stages(nMids - 1)
-        if (fin.size > 0) {
-          out += new GenericInternalRow(Array[Any](
-            fin.s(fin.head), fin.e(fin.head),
-            new GenericArrayData(fin.bs(fin.head)), t))
-          lHead = 0; lTail = 0
-          j = 0
-          while (j < nMids) { stages(j).clear(); j += 1 }
-        }
-      } else if (k >= 1) { // Bk: convert from the stage below
-        val st = stages(k - 1)
-        val bar = st.lastS
-        if (k == 1) {
-          var p = lHead
-          while (p <= lTail - min) {
-            if (loop(p) > bar) st.install(loop(p), loop(p + min - 1),
-              Array(t))
-            p += 1
-          }
-        } else {
-          val src = stages(k - 2)
-          var p = src.head
-          while (p < src.tail) {
-            if (src.s(p) > bar) {
-              val nb = new Array[Long](src.bs(p).length + 1)
-              System.arraycopy(src.bs(p), 0, nb, 0, src.bs(p).length)
-              nb(nb.length - 1) = t
-              st.install(src.s(p), src.e(p), nb)
-            }
-            p += 1
-          }
-        }
-      } else { // A
-        growLoop()
-        loop(lTail) = t
-        lTail += 1
-      }
+      step(st, row.getLong(0), row.getInt(2), minTimes.toInt, withinUs, out)
       i += 1
     }
     new GenericArrayData(out.toArray)

@@ -30,9 +30,6 @@ object GraftFunctions {
       CepNegFold(args(0), args(1).eval().asInstanceOf[Number].longValue,
         args(2).eval().asInstanceOf[Number].longValue,
         flush = args.length <= 3 || args(3).eval() == true) },
-    "graft_cep_fold3" -> { args =>
-      CepFold3(args(0), args(1).eval().asInstanceOf[Number].longValue,
-        args(2).eval().asInstanceOf[Number].longValue) },
     "graft_cep_fold_chain" -> { args =>
       CepFoldChain(args(0), args(1).eval().asInstanceOf[Number].longValue,
         args(2).eval().asInstanceOf[Number].longValue,
@@ -133,10 +130,6 @@ object GraftFunctions {
       org.apache.spark.sql.functions.lit(minTimes),
       org.apache.spark.sql.functions.lit(withinUs),
       org.apache.spark.sql.functions.lit(flush))
-  def graftCepFold3(evs: Column, minTimes: Long, withinUs: Long): Column =
-    call_function("graft_cep_fold3", evs,
-      org.apache.spark.sql.functions.lit(minTimes),
-      org.apache.spark.sql.functions.lit(withinUs))
   def graftCepFoldChain(evs: Column, minTimes: Long, withinUs: Long,
       nMids: Int): Column =
     call_function("graft_cep_fold_chain", evs,

@@ -1,9 +1,15 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import scala.collection.mutable.ArrayBuffer
+
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
+
+import graft.functions.{CepFold, CepFoldChain, CepNegFold, GraftFunctions, LongRing}
 
 /** Flink-CEP-style pattern surface — the reference's API shape
   * (`Pattern.begin("frag").where(pkts < 10).times(10, 30)
@@ -54,13 +60,15 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * ordinary operators; one exchange on the key, reused by the stacked
   * windows); relaxed mode to one exchange + a per-key ordered fold run
   * by the native [[graft.functions.CepFold]] expression (see
-  * [[detectRelaxed]]). Stream-side both are a
-  * `flatMapGroupsWithState` fold whose per-key state is bounded: O(max)
-  * timestamps for strict, O(events in one `within` window) for relaxed
-  * (entries too old to ever start a future match are pruned as they age
-  * out), plus the ordering cursor with the same late-event drop guard as
-  * `cusumStream` (CEP is sequential; folding a late event would rewrite
-  * match history).
+  * [[detectRelaxed]]). Stream-side every mode is one
+  * `flatMapGroupsWithState` runner ([[streamFold]]) whose per-key state
+  * is bounded: O(max) timestamps for strict, O(events in one `within`
+  * window) for the relaxed modes (entries too old to ever start a future
+  * match are pruned as they age out), plus the ordering cursor with the
+  * same late-event drop guard as `cusumStream` (CEP is sequential;
+  * folding a late event would rewrite match history). Each relaxed fold
+  * is written once: the stream resumes the batch expression's own step
+  * from the key's state.
   */
 final case class CepPattern(
     keyCol: String,
@@ -93,94 +101,83 @@ final case class CepPattern(
     * predicates reference. Output: key, run_start_us, run_end_us,
     * next_ts_us, run_count — for the NEGATIVE pattern next_ts_us is the
     * window-expiry instant run_start_us + within (there is no terminator
-    * row; the match IS its absence).
+    * row; the match IS its absence); a chained pattern adds the taken
+    * middle timestamps as `mid_ts_us_list` before next_ts_us.
     */
   def detect(events: DataFrame): DataFrame =
-    if (midPreds.size >= 2) detectChain(events)
-    else if (midPreds.size == 1) detectThreeStage(events)
+    if (midPreds.nonEmpty) detectChain(events)
     else if (negative) detectNegative(events)
     else if (relaxed) detectRelaxed(events)
     else detectStrict(events)
 
-  /** The THREE-stage chain `A{min,} followedBy B followedBy C within w`
-    * — same one-exchange + per-key fold plan as [[detectRelaxed]], run
-    * by the native [[graft.functions.CepFold3]] expression (see its doc
-    * for the pending-SET semantics — the r12 carried-partial lesson one
-    * stage up). Event classification precedence: C > B > A (an event
-    * matching a later stage acts as that stage, consistent with the
-    * two-stage next-precedence); events matching no stage are
-    * transparent and filtered before the shuffle. Output carries the
-    * taken middle event's timestamp as `mid_ts_us`.
+  /** Each event's stage, the one classification batch and stream share:
+    * 0 = loop, 1..m = the m middles in order, m + 1 = the terminator,
+    * -1 = neutral (matches no stage). The relaxed modes give the LATEST
+    * stage precedence (an event matching the loop and the terminator
+    * terminates); strict mode lets the loop win (such an event extends
+    * the run). In the two-stage relaxed modes a loop event also needs a
+    * non-null terminator predicate — a null one leaves it neutral.
     */
-  private def detectThreeStage(events: DataFrame): DataFrame = {
-    {
-      import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
-      val idT = events.schema(idCol).dataType
-      require(Seq(ByteType, ShortType, IntegerType, LongType).contains(idT),
-        s"relaxed CEP orders ties by an integral id; '$idCol' is " +
-          s"${idT.catalogString} — map it to a numeric id first")
-    }
-    val mid = midPreds.head
-    val e = events
-      .withColumn("__k",
-        when(nextPred, 2).when(mid, 1).when(runPred, 0).otherwise(-1))
+  private def kindCol: Column = {
+    val m = midPreds.size
+    if (!relaxed) when(runPred, 0).when(nextPred, 1).otherwise(-1)
+    else midPreds.zipWithIndex.reverse
+      .foldLeft(when(nextPred, m + 1)) { case (acc, (p, j)) => acc.when(p, j + 1) }
+      .when(if (m == 0) runPred && !nextPred else runPred, 0)
+      .otherwise(-1)
+  }
+
+  /** The fold modes order same-timestamp ties by the id as a long, and
+    * the streams key their state by the key as a long: a fractional or
+    * string column would cast to a truncated or null long and silently
+    * reorder, merge or drop events (two ids 1.2 and 1.7 at one ts both
+    * become 1, and the second reads as late) — refuse it loud.
+    */
+  private def requireIntegral(events: DataFrame, c: String): Unit = {
+    val t = events.schema(c).dataType
+    require(Seq(ByteType, ShortType, IntegerType, LongType).contains(t),
+      s"CEP needs an integral '$c' column; it is ${t.catalogString} — " +
+        "map it to a numeric id first")
+  }
+
+  /** The plan every fold mode shares: ONE exchange on the key, then a
+    * per-key ordered fold. Neutral events are filtered BEFORE the
+    * shuffle, so the per-key array carries only pattern-relevant events;
+    * each key's (t, id, flag) events are sorted by (t, id) and `fold`
+    * runs over the array; `out` picks the match struct `m`'s fields.
+    */
+  private def foldPlan(events: DataFrame, flag: (String, Column),
+      fold: Column => Column, out: Column*): DataFrame = {
+    requireIntegral(events, idCol)
+    events
+      .withColumn("__k", kindCol)
       .filter(col("__k") >= 0)
       .select(col(keyCol),
         unix_micros(col(tsCol)).as("t"),
         col(idCol).cast("long").as("id"),
-        col("__k").as("k"))
-    e.groupBy(keyCol)
-      .agg(collect_list(struct(col("t"), col("id"), col("k"))).as("__evs"))
-      .select(col(keyCol), explode(graft.functions.GraftFunctions.graftCepFold3(
-        array_sort(col("__evs")), minTimes, withinUs)).as("m"))
-      .select(col(keyCol), col("m.s").as("run_start_us"),
-        col("m.e").as("run_end_us"), col("m.b").as("mid_ts_us"),
-        col("m.n").as("next_ts_us"), lit(minTimes).as("run_count"))
+        flag._2.as(flag._1))
+      .groupBy(keyCol)
+      .agg(collect_list(struct(col("t"), col("id"), col(flag._1))).as("__evs"))
+      .select(col(keyCol), explode(fold(array_sort(col("__evs")))).as("m"))
+      .select(col(keyCol) +: out: _*)
       .orderBy(keyCol, "run_start_us")
   }
 
-  /** The GENERAL chain `A{min,} followedBy B1 … followedBy Bm
-    * followedBy C within w` for m ≥ 2 middles — same one-exchange plan,
-    * run by [[graft.functions.CepFoldChain]] (the CepFold3 rules applied
-    * stage-by-stage; its scaladoc carries the induction). Classification
-    * precedence latest-stage-first (C > Bm > … > B1 > A), consistent
-    * with the two- and three-stage forms; neutral events transparent and
-    * filtered before the shuffle. Output carries the m taken middle
-    * timestamps as `mid_ts_us_list` in stage order.
+  /** The chain `A{min,} followedBy B1 … followedBy Bm followedBy C
+    * within w` for m ≥ 1 middles — the shared one-exchange plan, run by
+    * [[graft.functions.CepFoldChain]] (its scaladoc carries the
+    * pending-set rules and the induction). Classification precedence
+    * latest-stage-first (C > Bm > … > B1 > A), consistent with the
+    * two-stage form; neutral events transparent and filtered before the
+    * shuffle. Output carries the m taken middle timestamps as
+    * `mid_ts_us_list` in stage order.
     */
-  private def detectChain(events: DataFrame): DataFrame = {
-    {
-      import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
-      val idT = events.schema(idCol).dataType
-      require(Seq(ByteType, ShortType, IntegerType, LongType).contains(idT),
-        s"relaxed CEP orders ties by an integral id; '$idCol' is " +
-          s"${idT.catalogString} — map it to a numeric id first")
-    }
-    val m = midPreds.size
-    val kCol = {
-      val afterNext = midPreds.zipWithIndex.reverse
-        .foldLeft(when(nextPred, m + 1)) {
-          case (acc, (p, j)) => acc.when(p, j + 1)
-        }
-      afterNext.when(runPred, 0).otherwise(-1)
-    }
-    val e = events
-      .withColumn("__k", kCol)
-      .filter(col("__k") >= 0)
-      .select(col(keyCol),
-        unix_micros(col(tsCol)).as("t"),
-        col(idCol).cast("long").as("id"),
-        col("__k").as("k"))
-    e.groupBy(keyCol)
-      .agg(collect_list(struct(col("t"), col("id"), col("k"))).as("__evs"))
-      .select(col(keyCol), explode(graft.functions.GraftFunctions
-        .graftCepFoldChain(array_sort(col("__evs")), minTimes, withinUs, m))
-        .as("m"))
-      .select(col(keyCol), col("m.s").as("run_start_us"),
-        col("m.e").as("run_end_us"), col("m.bs").as("mid_ts_us_list"),
-        col("m.n").as("next_ts_us"), lit(minTimes).as("run_count"))
-      .orderBy(keyCol, "run_start_us")
-  }
+  private def detectChain(events: DataFrame): DataFrame =
+    foldPlan(events, "k" -> col("__k"),
+      GraftFunctions.graftCepFoldChain(_, minTimes, withinUs, midPreds.size),
+      col("m.s").as("run_start_us"), col("m.e").as("run_end_us"),
+      col("m.bs").as("mid_ts_us_list"), col("m.n").as("next_ts_us"),
+      lit(minTimes).as("run_count"))
 
   private def detectStrict(events: DataFrame): DataFrame = {
     val byKey = Window.partitionBy(keyCol).orderBy(tsCol, idCol)
@@ -207,18 +204,18 @@ final case class CepPattern(
       .orderBy(keyCol, "run_start_us")
   }
 
-  /** The literal-replay plan: ONE exchange on the key, then a per-key
-    * ordered fold (the native [[graft.functions.CepFold]] expression over
-    * the key's sorted run/next events) that IS the NFA — buffer of live branch starts,
-    * alive-suffix viability at each terminator, skip-past-last clear on
-    * match, partials carried across non-completing terminators. The fold
-    * state is `within`-pruned (same O(window) bound as the streaming
-    * twin); neutral events are filtered BEFORE the shuffle, so the
-    * per-key array carries only pattern-relevant events. Relaxed-literal
-    * CEP is intrinsically sequential per key (Flink's own runtime keys
-    * the stream exactly the same way); the unbounded-horizon path is the
-    * streaming twin in [[detectStream]], whose state never exceeds one
-    * `within` window.
+  /** The literal-replay plan: the shared one-exchange plan, with the
+    * native [[graft.functions.CepFold]] expression over the key's sorted
+    * run/next events as the fold that IS the NFA — buffer of live branch
+    * starts, alive-suffix viability at each terminator, skip-past-last
+    * clear on match, partials carried across non-completing terminators.
+    * The fold state is `within`-pruned (the same ring the stream resumes
+    * in [[detectStream]], whose state never exceeds one `within`
+    * window). Relaxed-literal CEP is intrinsically sequential per key
+    * (Flink's own runtime keys the stream exactly the same way). The
+    * fold is native because the equivalent `aggregate` HOF form measured
+    * ~48 us/event on the x20 hot-key stress: interpreted lambdas plus an
+    * immutable accumulator that copies the buffer per event.
     *
     * The alive-suffix trick that keeps the fold branch-free: a branch
     * started at s is viable at terminator n iff it has >= min loop
@@ -227,309 +224,177 @@ final case class CepPattern(
     * earliest viable branch's repetition list — element 1 is the match
     * start, element `min` its last kept repetition.
     */
-  private def detectRelaxed(events: DataFrame): DataFrame = {
-    // the fold carries ids as longs (CepFold's struct, the streaming
-    // twin's state): a non-integral idCol would CAST TO NULL and silently
-    // change same-timestamp tie-breaks vs both detectStrict (which orders
-    // by the raw column) and the documented (ts, id) order — refuse loud
-    {
-      import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
-      val idT = events.schema(idCol).dataType
-      require(Seq(ByteType, ShortType, IntegerType, LongType).contains(idT),
-        s"relaxed CEP orders ties by an integral id; '$idCol' is " +
-          s"${idT.catalogString} — map it to a numeric id first")
-    }
-    val e = events
-      .withColumn("__is_next", nextPred)
-      // next-precedence on an event matching both (see class doc)
-      .withColumn("__is_run", runPred && !col("__is_next"))
-      .filter(col("__is_run") || col("__is_next"))
-      .select(col(keyCol),
-        unix_micros(col(tsCol)).as("t"),
-        col(idCol).cast("long").as("id"),
-        col("__is_next").as("isn"))
-    // the fold itself is the native CepFold expression (head-pointer ring,
-    // allocation-free per event) — the equivalent `aggregate` HOF form
-    // measured ~48 us/event on the x20 hot-key stress: interpreted lambdas
-    // plus an immutable accumulator that copies the buffer per event
-    e.groupBy(keyCol)
-      .agg(collect_list(struct(col("t"), col("id"), col("isn"))).as("__evs"))
-      .select(col(keyCol), explode(graft.functions.GraftFunctions.graftCepFold(
-        array_sort(col("__evs")), minTimes, withinUs,
-        greedyLoop, optionalLoop)).as("m"))
-      .select(col(keyCol), col("m.s").as("run_start_us"),
-        col("m.e").as("run_end_us"), col("m.n").as("next_ts_us"),
-        col("m.c").as("run_count"))
-      .orderBy(keyCol, "run_start_us")
-  }
+  private def detectRelaxed(events: DataFrame): DataFrame =
+    foldPlan(events, "isn" -> (col("__k") === 1),
+      GraftFunctions.graftCepFold(_, minTimes, withinUs, greedyLoop, optionalLoop),
+      col("m.s").as("run_start_us"), col("m.e").as("run_end_us"),
+      col("m.n").as("next_ts_us"), col("m.c").as("run_count"))
 
-  /** The NEGATIVE (`notFollowedBy`) plan — same ONE-exchange + per-key
-    * fold shape as [[detectRelaxed]], run by the native
-    * [[graft.functions.CepNegFold]] expression: a run of >= min loop
-    * events whose `within` window closes WITHOUT a terminator (the
-    * "attack that fizzled"). Batch data is complete, so branches still
-    * alive after a key's last event flush at their expiries (the fold's
-    * `flush = true`); the streaming twin cannot know the future and
-    * emits a branch's match when a later event passes its expiry.
+  /** The NEGATIVE (`notFollowedBy`) plan — the shared one-exchange plan,
+    * run by the native [[graft.functions.CepNegFold]] expression: a run
+    * of >= min loop events whose `within` window closes WITHOUT a
+    * terminator (the "attack that fizzled"). A both-event terminates, as
+    * in the positive mode: it "follows" the partials and kills them.
+    * Batch data is complete, so branches still alive after a key's last
+    * event flush at their expiries (the fold's `flush = true`); the
+    * stream cannot know the future and emits a branch's match when a
+    * later event passes its expiry.
     */
-  private def detectNegative(events: DataFrame): DataFrame = {
-    {
-      import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
-      val idT = events.schema(idCol).dataType
-      require(Seq(ByteType, ShortType, IntegerType, LongType).contains(idT),
-        s"relaxed CEP orders ties by an integral id; '$idCol' is " +
-          s"${idT.catalogString} — map it to a numeric id first")
-    }
-    val e = events
-      .withColumn("__is_b", nextPred)
-      // terminator precedence on an event matching both, as in the
-      // positive mode: a both-event "follows" the partials and kills them
-      .withColumn("__is_run", runPred && !col("__is_b"))
-      .filter(col("__is_run") || col("__is_b"))
-      .select(col(keyCol),
-        unix_micros(col(tsCol)).as("t"),
-        col(idCol).cast("long").as("id"),
-        col("__is_b").as("isb"))
-    e.groupBy(keyCol)
-      .agg(collect_list(struct(col("t"), col("id"), col("isb"))).as("__evs"))
-      .select(col(keyCol), explode(graft.functions.GraftFunctions.graftCepNegFold(
-        array_sort(col("__evs")), minTimes, withinUs)).as("m"))
-      .select(col(keyCol), col("m.s").as("run_start_us"),
-        col("m.e").as("run_end_us"), col("m.x").as("next_ts_us"),
-        col("m.c").as("run_count"))
-      .orderBy(keyCol, "run_start_us")
-  }
+  private def detectNegative(events: DataFrame): DataFrame =
+    foldPlan(events, "isb" -> (col("__k") === 1),
+      GraftFunctions.graftCepNegFold(_, minTimes, withinUs),
+      col("m.s").as("run_start_us"), col("m.e").as("run_end_us"),
+      col("m.x").as("next_ts_us"), col("m.c").as("run_count"))
 
-  /** Streaming detection. `events` must be a streaming frame whose key and
-    * id columns are LongType and whose `tsCol` is epoch-micro LongType
-    * (streams carry epoch integers; batch callers convert once). Same
-    * output row per match as [[detect]], as they arrive.
+  /** The stream runner both stream entries share. `events` must carry an
+    * integral key and id and an epoch-micro LongType `tsCol`, checked
+    * before any query starts. Events are classified by [[kindCol]] and
+    * grouped by key; per key and micro-batch they are sorted by (ts, id),
+    * and every event at or before the key's cursor is dropped — a
+    * cross-batch late event (or a replay) is never folded out of order
+    * (the cusumStream discipline). `fold(key, state, events, lastTs,
+    * lastId)` resumes the key's fold from its state over the fresh
+    * (ts, kind) events and returns the state to store, stamped with the
+    * new cursor, and the matches. The closure captures only `fold`, never
+    * `this`: the pattern holds Column trees, which do not serialize.
     */
-  /** Streaming twin of [[detectThreeStage]]: the same fold as
-    * [[graft.functions.CepFold3]] over List state (loop buffer + pending
-    * set, both within-pruned), emitted as matches arrive.
-    */
-  def detectThreeStageStream(events: DataFrame): Dataset[CepPattern.Match3] = {
-    require(midPreds.size == 1, "detectThreeStageStream folds exactly one middle stage")
+  private def streamFold[S <: CepPattern.Cursor : Encoder, M : Encoder](
+      events: DataFrame)(
+      fold: (Long, Option[S], Array[(Long, Int)], Long, Long) => (S, Iterator[M])
+  ): Dataset[M] = {
+    requireIntegral(events, keyCol)
+    requireIntegral(events, idCol)
+    val tsT = events.schema(tsCol).dataType
+    require(tsT == LongType,
+      s"a CEP stream's '$tsCol' must be epoch micros as bigint; it is ${tsT.catalogString}")
     val spark = events.sparkSession
     import spark.implicits._
-    val mid = midPreds.head
-    val typed = events
-      .select(col(keyCol).cast("long"), col(idCol).cast("long"),
-        col(tsCol).cast("long"),
-        when(nextPred, 2).when(mid, 1).when(runPred, 0).otherwise(-1).as("k"))
+    events
+      .select(col(keyCol).cast("long"), col(idCol).cast("long"), col(tsCol),
+        kindCol)
       .as[(Long, Long, Long, Int)]
-    val (minT, withinT) = (minTimes.toInt, withinUs)
-    typed.groupByKey(_._1)
-      .flatMapGroupsWithState[CepPattern.State3, CepPattern.Match3](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (key, it, state: GroupState[CepPattern.State3]) =>
-          val rows = it.toArray.sortBy(r => (r._3, r._2))
-          var st = state.getOption.getOrElse(
-            CepPattern.State3(Nil, Nil, Long.MinValue, Long.MinValue))
-          val out = Seq.newBuilder[CepPattern.Match3]
-          rows.foreach { case (_, id, ts, k) =>
-            if (ts < st.lastTs || (ts == st.lastTs && id <= st.lastId)) ()
-            else {
-              var loop = st.buf.dropWhile(ts - _ > withinT)
-              var pend = st.pend.dropWhile(p => ts - p._1 > withinT)
-              k match {
-                case 2 =>
-                  pend.headOption.foreach { case (s, e, b) =>
-                    out += CepPattern.Match3(key, s, e, b, ts, minT.toLong)
-                    loop = Nil; pend = Nil // skip-past-last
-                  }
-                case 1 =>
-                  val lastS = pend.lastOption.map(_._1).getOrElse(Long.MinValue)
-                  val cand = (0 to loop.size - minT)
-                    .map(i => (loop(i), loop(i + minT - 1), ts))
-                    .filter(_._1 > lastS)
-                  pend = pend ++ cand
-                case 0 => loop = loop :+ ts
-                case _ => () // neutral: transparent
-              }
-              st = CepPattern.State3(loop, pend, ts, id)
-            }
+      .groupByKey(_._1)
+      .flatMapGroupsWithState[S, M](OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
+        (key: Long, it: Iterator[(Long, Long, Long, Int)], state: GroupState[S]) =>
+          val prev = state.getOption
+          var lastTs = prev.fold(Long.MinValue)(_.lastTs)
+          var lastId = prev.fold(Long.MinValue)(_.lastId)
+          val fresh = it.toArray.sortBy(r => (r._3, r._2)).flatMap {
+            case (_, id, ts, k) =>
+              if (ts < lastTs || (ts == lastTs && id <= lastId)) None
+              else { lastTs = ts; lastId = id; Some((ts, k)) }
           }
-          state.update(st)
-          out.result().iterator
+          if (fresh.isEmpty) Iterator.empty
+          else {
+            val (st, out) = fold(key, prev, fresh, lastTs, lastId)
+            state.update(st)
+            out
+          }
       }
   }
 
-  /** Streaming twin of [[detectChain]] — the same stage-by-stage fold as
-    * [[graft.functions.CepFoldChain]] over List state (loop buffer + one
-    * pending list per middle stage, all within-pruned, O(one window)
-    * per stage per key), matches emitted as they arrive, under the
-    * cusumStream late-drop ordering contract. `CepNfaSpec` pins an
-    * in-order replay bit-identical to the batch detect across
-    * micro-batch boundaries.
+  /** Streaming detection for the two-stage patterns. `events` must be a
+    * streaming frame whose key and id columns are integral and whose
+    * `tsCol` is epoch-micro LongType (streams carry epoch integers;
+    * batch callers convert once). Same output row per match as
+    * [[detect]], as they arrive. The relaxed and negative modes resume
+    * the batch folds' own steps ([[graft.functions.CepFold.step]],
+    * [[graft.functions.CepNegFold.step]]) from the key's state; strict
+    * mode keeps a ring of at most `max` run timestamps per key.
+    */
+  def detectStream(events: DataFrame): Dataset[CepPattern.Match] = {
+    require(midPreds.isEmpty, "chained patterns stream via detectChainStream")
+    val spark = events.sparkSession
+    import spark.implicits._
+    // only the bounds ship in the stateful closure, never `this`
+    val (min, maxT, w) = (minTimes.toInt, maxTimes.toInt, withinUs)
+    val (isRelaxed, isNegative) = (relaxed, negative)
+    val (greedy, optional) = (greedyLoop, optionalLoop)
+    streamFold[CepPattern.State, CepPattern.Match](events) {
+      (key, prev, evs, lastTs, lastId) =>
+        val buf0 = prev.fold(List.empty[Long])(_.buf)
+        if (!isRelaxed) {
+          var buf = buf0
+          val out = List.newBuilder[CepPattern.Match]
+          evs.foreach { case (ts, k) =>
+            if (k == 0) buf = (buf :+ ts).takeRight(maxT)
+            else {
+              if (k == 1 && buf.size >= min && ts - buf.head <= w)
+                out += CepPattern.Match(key, buf.head, buf.last, ts, buf.size.toLong)
+              buf = Nil // island broken (or consumed: skip-past-last)
+            }
+          }
+          (CepPattern.State(buf, lastTs, lastId), out.result().iterator)
+        } else {
+          val live = LongRing.sized(buf0.size + evs.length)
+          buf0.foreach(live.push)
+          val out = ArrayBuffer.empty[Any]
+          evs.foreach { case (ts, k) =>
+            if (isNegative) {
+              // a neutral event is transparent, but its time still passes
+              if (k < 0) CepNegFold.expireBefore(live, ts, min, w, out)
+              else CepNegFold.step(live, ts, k == 1, min, w, out)
+            } else if (k >= 0) CepFold.step(live, ts, k == 1, min, w, greedy, optional, out)
+          }
+          (CepPattern.State(live.toList, lastTs, lastId), out.iterator.map { a =>
+            val r = a.asInstanceOf[InternalRow]
+            CepPattern.Match(key, r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
+          })
+        }
+    }
+  }
+
+  /** Streaming twin of [[detectChain]]: the same
+    * [[graft.functions.CepFoldChain.step]], resumed from the key's state
+    * (loop buffer + one pending list per middle, all within-pruned,
+    * O(one window) per stage per key), matches emitted as they arrive.
+    * `CepNfaSpec` pins an in-order replay bit-identical to the batch
+    * detect across micro-batch boundaries.
     */
   def detectChainStream(events: DataFrame): Dataset[CepPattern.MatchChain] = {
-    require(midPreds.size >= 2,
-      "detectChainStream folds two or more middle stages")
+    require(midPreds.nonEmpty, "detectChainStream folds one or more middle stages")
     val spark = events.sparkSession
     import spark.implicits._
-    val m = midPreds.size
-    val kCol = {
-      val afterNext = midPreds.zipWithIndex.reverse
-        .foldLeft(when(nextPred, m + 1)) {
-          case (acc, (p, j)) => acc.when(p, j + 1)
+    val (min, w, m) = (minTimes.toInt, withinUs, midPreds.size)
+    streamFold[CepPattern.StateChain, CepPattern.MatchChain](events) {
+      (key, prev, evs, lastTs, lastId) =>
+        val st = new CepFoldChain.State(
+          prev.fold(0)(_.buf.size) + evs.length, m)
+        prev.foreach { p =>
+          p.buf.foreach(st.loop.push)
+          p.pends.zip(st.stages).foreach { case (pend, stage) =>
+            pend.foreach(e => stage.install(e.s, e.e, e.bs.toArray))
+          }
         }
-      afterNext.when(runPred, 0).otherwise(-1)
+        val out = ArrayBuffer.empty[Any]
+        evs.foreach { case (ts, k) =>
+          if (k >= 0) CepFoldChain.step(st, ts, k, min, w, out)
+        }
+        val pends = st.stages.toList.map { stage =>
+          (stage.head until stage.tail).toList.map(i =>
+            CepPattern.PendEntry(stage.s(i), stage.e(i), stage.bs(i).toList))
+        }
+        (CepPattern.StateChain(st.loop.toList, pends, lastTs, lastId),
+          out.iterator.map { a =>
+            val r = a.asInstanceOf[InternalRow]
+            CepPattern.MatchChain(key, r.getLong(0), r.getLong(1),
+              r.getArray(2).toLongArray().toList, r.getLong(3), min.toLong)
+          })
     }
-    val typed = events
-      .select(col(keyCol).cast("long"), col(idCol).cast("long"),
-        col(tsCol).cast("long"), kCol.as("k"))
-      .as[(Long, Long, Long, Int)]
-    val (minT, withinT) = (minTimes.toInt, withinUs)
-    typed.groupByKey(_._1)
-      .flatMapGroupsWithState[CepPattern.StateChain, CepPattern.MatchChain](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (key, it, state: GroupState[CepPattern.StateChain]) =>
-          val rows = it.toArray.sortBy(r => (r._3, r._2))
-          var st = state.getOption.getOrElse(CepPattern.StateChain(
-            Nil, List.fill(m)(Nil), Long.MinValue, Long.MinValue))
-          val out = Seq.newBuilder[CepPattern.MatchChain]
-          rows.foreach { case (_, id, ts, k) =>
-            if (ts < st.lastTs || (ts == st.lastTs && id <= st.lastId)) ()
-            else {
-              var loop = st.buf.dropWhile(ts - _ > withinT)
-              var pends = st.pends.map(_.dropWhile(p => ts - p.s > withinT))
-              if (k == m + 1) {
-                pends.last.headOption.foreach { p =>
-                  out += CepPattern.MatchChain(key, p.s, p.e, p.bs, ts,
-                    minT.toLong)
-                  loop = Nil; pends = List.fill(m)(Nil) // skip-past-last
-                }
-              } else if (k >= 1) {
-                val j = k - 1
-                val bar = pends(j).lastOption.map(_.s).getOrElse(Long.MinValue)
-                val cand =
-                  if (j == 0)
-                    (0 to loop.size - minT)
-                      .map(i => CepPattern.PendEntry(loop(i),
-                        loop(i + minT - 1), List(ts)))
-                      .filter(_.s > bar)
-                  else
-                    pends(j - 1).filter(_.s > bar)
-                      .map(p => CepPattern.PendEntry(p.s, p.e, p.bs :+ ts))
-                pends = pends.updated(j, pends(j) ++ cand)
-              } else if (k == 0) loop = loop :+ ts
-              // k == -1: neutral, transparent
-              st = CepPattern.StateChain(loop, pends, ts, id)
-            }
-          }
-          state.update(st)
-          out.result().iterator
-      }
-  }
-
-  def detectStream(events: DataFrame): Dataset[CepPattern.Match] = {
-    require(midPreds.isEmpty,
-      "three-stage patterns stream via detectThreeStageStream")
-    val spark = events.sparkSession
-    import spark.implicits._
-    val typed = events
-      .select(col(keyCol).cast("long"), col(idCol).cast("long"),
-        col(tsCol).cast("long"), runPred.as("__run"), nextPred.as("__next"))
-      .as[(Long, Long, Long, Boolean, Boolean)]
-    // the stateful closure must not capture `this` — the pattern holds
-    // Column trees, which do not serialize; only the bounds ship
-    val (minT, maxT, withinT) = (minTimes, maxTimes.toInt, withinUs)
-    val isRelaxed = relaxed
-    val isNegative = negative
-    val isGreedy = greedyLoop
-    val isOptional = optionalLoop
-    typed.groupByKey(_._1)
-      .flatMapGroupsWithState[CepPattern.State, CepPattern.Match](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (key, it, state: GroupState[CepPattern.State]) =>
-          val rows = it.toArray.sortBy(r => (r._3, r._2)) // within-batch order
-          var st = state.getOption.getOrElse(
-            CepPattern.State(Nil, Long.MinValue, Long.MinValue))
-          val out = Seq.newBuilder[CepPattern.Match]
-          // negative-mode expiry sweep (the CepNegFold loop over a List
-          // state): emit every branch whose window closed before `now`,
-          // consuming up to its last kept repetition on a match
-          def expireBefore(now: Long): Unit = {
-            var buf = st.buf
-            while (buf.nonEmpty && buf.head + withinT < now) {
-              val s = buf.head
-              if (buf.size >= minT && buf(minT.toInt - 1) <= s + withinT) {
-                val e = buf(minT.toInt - 1)
-                out += CepPattern.Match(key, s, e, s + withinT, minT)
-                buf = buf.dropWhile(_ <= e)
-              } else buf = buf.tail
-            }
-            st = st.copy(buf = buf)
-          }
-          rows.foreach { case (_, id, ts, isRun0, isNext) =>
-            // sequential statistic: a cross-batch late event is dropped,
-            // never folded out of order (the cusumStream discipline)
-            if (ts < st.lastTs || (ts == st.lastTs && id <= st.lastId)) ()
-            else {
-              if (isNegative) {
-                expireBefore(ts)
-                if (isNext) st = st.copy(buf = Nil) // terminator kills all
-                else if (isRun0) st = st.copy(buf = st.buf :+ ts)
-              } else if (isRelaxed) {
-                // literal mode: next-precedence, neither-events transparent
-                if (isNext) {
-                  // alive suffix = the earliest viable branch's repetitions
-                  val alive = st.buf.dropWhile(ts - _ > withinT)
-                  if (alive.size >= minT) {
-                    val c = if (isGreedy) alive.size.toLong else minT
-                    out += CepPattern.Match(key, alive.head,
-                      alive(c.toInt - 1), ts, c)
-                    st = st.copy(buf = Nil) // skip-past-last: discard all
-                  } else if (isOptional) {
-                    // empty match: the optional loop completes with zero
-                    // repetitions; skip-past-last consumes the partials
-                    out += CepPattern.Match(key, ts, ts, ts, 0L)
-                    st = st.copy(buf = Nil)
-                  }
-                  // no branch completes: the relaxed IGNORE edge skips the
-                  // terminator for sub-min partials — they CARRY (the NFA
-                  // semantics CepNfaSpec pins; the r11 island model wrongly
-                  // cleared here)
-                } else if (isRun0) {
-                  // prune entries too old to start any FUTURE match: the
-                  // next event's ts can only be >= this one, so anything
-                  // past `within` of NOW is already dead — this is what
-                  // bounds the state at O(one within-window of run events)
-                  st = st.copy(buf = (st.buf :+ ts).dropWhile(ts - _ > withinT))
-                }
-              } else {
-                if (isRun0) {
-                  st = st.copy(buf = (st.buf :+ ts).takeRight(maxT))
-                } else {
-                  if (isNext && st.buf.size >= minT &&
-                      ts - st.buf.head <= withinT)
-                    out += CepPattern.Match(key, st.buf.head, st.buf.last,
-                      ts, st.buf.size.toLong)
-                  st = st.copy(buf = Nil) // island broken (or consumed: skip-past-last)
-                }
-              }
-              st = st.copy(lastTs = ts, lastId = id)
-            }
-          }
-          state.update(st)
-          out.result().iterator
-      }
   }
 }
 
 object CepPattern {
+  /** A stream state's ordering cursor: the last folded event's (ts, id). */
+  sealed trait Cursor { def lastTs: Long; def lastId: Long }
   final case class State(buf: List[Long], lastTs: Long, lastId: Long)
+      extends Cursor
   final case class Match(key: Long, run_start_us: Long, run_end_us: Long,
       next_ts_us: Long, run_count: Long)
-  final case class State3(buf: List[Long], pend: List[(Long, Long, Long)],
-      lastTs: Long, lastId: Long)
-  final case class Match3(key: Long, run_start_us: Long, run_end_us: Long,
-      mid_ts_us: Long, next_ts_us: Long, run_count: Long)
   final case class PendEntry(s: Long, e: Long, bs: List[Long])
   final case class StateChain(buf: List[Long],
       pends: List[List[PendEntry]], lastTs: Long, lastId: Long)
+      extends Cursor
   final case class MatchChain(key: Long, run_start_us: Long,
       run_end_us: Long, mid_ts_us_list: List[Long], next_ts_us: Long,
       run_count: Long)
@@ -611,8 +476,7 @@ object CepPattern {
       min: Long, max: Long, mids: Seq[Column], nextPred: Column) {
     /** Chain a FURTHER stage: the current terminator becomes one more
       * relaxed middle stage and `pred` the new terminator — arbitrary
-      * chain depth, compiled onto the general [[graft.functions.CepFoldChain]]
-      * (two middles and up; one middle keeps the tuned CepFold3 path).
+      * chain depth, compiled onto the general [[graft.functions.CepFoldChain]].
       */
     def followedBy(pred: Column): WithinStep3 =
       new WithinStep3(keyCol, runPred, min, max, mids :+ nextPred, pred)

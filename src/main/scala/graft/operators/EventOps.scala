@@ -477,9 +477,9 @@ object EventOps {
     * pending even after earlier starts age out — `CepNfaSpec` pins the
     * multi-pending counterexample a single-pending model misses, plus
     * batch+streaming fuzz vs the partial-set interpreter). One exchange
-    * + the native `CepFold3` per-key fold; the oracle replays the
-    * identical fold as a per-key recursive CTE carrying the loop buffer
-    * AND the three pending lists.
+    * + the native [[graft.functions.CepFoldChain]] per-key fold with one
+    * middle stage; the oracle replays the identical fold as a per-key
+    * recursive CTE carrying the loop buffer AND the three pending lists.
     */
   def cep3Stage(s: SparkSession, dir: String): DataFrame =
     cep3StageOn(Tables.t(s, dir, "events"))
@@ -495,7 +495,7 @@ object EventOps {
       .select(col("user_id").as("target_id"),
         col("run_start_us").as("attack_start_us"),
         col("run_end_us").as("attack_end_us"),
-        col("mid_ts_us").as("probe_ts_us"),
+        element_at(col("mid_ts_us_list"), 1).as("probe_ts_us"),
         col("next_ts_us").as("normal_ts_us"),
         col("run_count").as("fragment_count"))
       .orderBy("target_id", "attack_start_us")
@@ -558,8 +558,8 @@ object EventOps {
     * followedBy probe2 followedBy high within 24h`: the full kill-chain
     * escalation (flood → low recon → high recon → strike), compiled
     * through the builder's arbitrary-depth `followedBy` onto the general
-    * native [[graft.functions.CepFoldChain]] (the CepFold3 pending-set
-    * rules applied stage-by-stage; induction + fuzz vs the independent
+    * native [[graft.functions.CepFoldChain]] (the pending-set rules
+    * applied stage-by-stage; induction + fuzz vs the independent
     * `CepNfaSpec.replayChain` interpreter). Stage bands: value < 50 loop,
     * [50, 75) probe1, [75, 100] probe2, > 100 strike. One exchange + the
     * per-key fold; the oracle replays the identical fold as a per-key

@@ -379,7 +379,7 @@ object Stress {
     // relaxed-literal CEP (r12 NFA fold): copies live in disjoint user
     // spaces, so each copy's per-key fold is isomorphic to copy 0's —
     // match count must be EXACTLY linear (hard require); wall time is the
-    // fold's scaling curve (one exchange + per-key aggregate HOF)
+    // fold's scaling curve (one exchange + the per-key native CepFold)
     locally {
       var flink1 = 0L
       time("cep-flink x1")({ flink1 = EventOps.cepAttackFlinkOn(ev).count(); flink1 })
@@ -392,9 +392,9 @@ object Stress {
       spark.catalog.clearCache()
     }
 
-    // three-stage chain (r13 CepFold3): same disjoint-user-space argument
-    // — match count exactly linear (hard require); wall is the fold's
-    // curve (one exchange + per-key pending-set fold)
+    // three-stage chain (CepFoldChain, one middle): same disjoint-user-
+    // space argument — match count exactly linear (hard require); wall is
+    // the fold's curve (one exchange + per-key pending-set fold)
     locally {
       var c3 = 0L
       time("cep-3stage x1")({ c3 = EventOps.cep3StageOn(ev).count(); c3 })

@@ -5,14 +5,17 @@ import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.CepFold
+import graft.functions.{CepFold, CepFoldChain, CepNegFold}
 
-/** Direct unit coverage of the CepFold ring buffer's memory-management
+/** Direct unit coverage of the CEP folds' ring buffer's memory-management
   * branches — the NFA SEMANTICS are property-pinned in CepNfaSpec on
   * fuzzed traffic, but those traces never push a within-window past the
   * 64Ki initial capacity (growth) and only lightly exercise the
   * compact-in-place path; a wrong copy there would corrupt matches only
-  * at exactly the corpus scales tests don't reach.
+  * at exactly the corpus scales tests don't reach. Every fold shares the
+  * ring, so the growth, compaction and near-capacity traces also run
+  * through the negative fold (the run events alone, flushed) and the
+  * one-middle chain fold (the terminator read as a middle, then an end).
   */
 class CepFoldSpec extends AnyFunSuite {
 
@@ -32,6 +35,42 @@ class CepFoldSpec extends AnyFunSuite {
     }
   }
 
+  /** The negative fold over the run events of `events`, flushed. */
+  private def negMatches(events: Seq[(Long, Boolean)], min: Long,
+      within: Long): Seq[(Long, Long, Long)] = {
+    val out = CepNegFold.compute(arr(events.filterNot(_._2)), min, within,
+      flush = true)
+    (0 until out.numElements()).map { i =>
+      val r = out.getStruct(i, 4)
+      (r.getLong(0), r.getLong(1), r.getLong(2))
+    }
+  }
+
+  /** Dense run events from ts 1, each branch's window closing empty:
+    * every 4 consecutive starts fizzle together.
+    */
+  private def fizzles(n: Int, within: Long): Seq[(Long, Long, Long)] =
+    (0 until n / 4).map(j => (1L + 4 * j, 4L + 4 * j, 1L + 4 * j + within))
+
+  /** The one-middle chain fold over `events` with its single terminator
+    * at t replaced by a middle at t and an end at t + 1.
+    */
+  private def chainMatches(events: Seq[(Long, Boolean)], min: Long,
+      within: Long): Seq[(Long, Long, Seq[Long], Long)] = {
+    val kinds = events.flatMap { case (t, isn) =>
+      if (isn) Seq((t, 1), (t + 1, 2)) else Seq((t, 0))
+    }
+    val out = CepFoldChain.compute(
+      new GenericArrayData(kinds.zipWithIndex.map { case ((t, k), i) =>
+        new GenericInternalRow(Array[Any](t, i.toLong, k))
+      }.toArray[Any]), min, within, nMids = 1)
+    (0 until out.numElements()).map { i =>
+      val r = out.getStruct(i, 4)
+      (r.getLong(0), r.getLong(1), r.getArray(2).toLongArray().toSeq,
+        r.getLong(3))
+    }
+  }
+
   test("growth path: a within-window larger than the initial capacity keeps every start") {
     // 100_000 dense frags (1 tick apart), within covers them all -> the
     // buffer must double past its 65536 initial capacity without losing
@@ -40,6 +79,9 @@ class CepFoldSpec extends AnyFunSuite {
     val evs = (1 to n).map(i => (i.toLong, false)) :+ ((n + 1).toLong, true)
     val got = matches(evs, min = 4, within = 10_000_000L)
     assert(got == Seq((1L, 4L, (n + 1).toLong)))
+    assert(negMatches(evs, 4, 10_000_000L) == fizzles(n, 10_000_000L))
+    assert(chainMatches(evs, 4, 10_000_000L) ==
+      Seq((1L, 4L, Seq((n + 1).toLong), (n + 2).toLong)))
   }
 
   test("compaction path: a sliding window over a long stream compacts in place without corruption") {
@@ -54,6 +96,10 @@ class CepFoldSpec extends AnyFunSuite {
     val got = matches(evs.toSeq :+ ((ts + 1, true)), min = 4, within = w)
     // earliest alive start at ts+1 is (ts + 1 - w); 4th frag from it
     assert(got == Seq((ts + 1 - w, ts + 4 - w, ts + 1)))
+    assert(negMatches(evs.toSeq, 4, w) == fizzles(200000, w))
+    // the end at ts + 2 has aged the earliest pending start out
+    assert(chainMatches(evs.toSeq :+ ((ts + 1, true)), 4, w) ==
+      Seq((ts + 2 - w, ts + 5 - w, Seq(ts + 1), ts + 2)))
   }
 
   test("near-capacity window: grows (head-offset copy) instead of compacting per event") {
@@ -71,6 +117,9 @@ class CepFoldSpec extends AnyFunSuite {
     val evs = (1 to n).map(i => (i.toLong, false)) :+ ((n + 1).toLong, true)
     val got = matches(evs, min = 4, within = w)
     assert(got == Seq((n + 1 - w, n + 4 - w, (n + 1).toLong)))
+    assert(negMatches(evs, 4, w) == fizzles(n, w))
+    assert(chainMatches(evs, 4, w) ==
+      Seq((n + 2 - w, n + 5 - w, Seq((n + 1).toLong), (n + 2).toLong)))
   }
 
   test("interleaved matches + carry-over across a long stream equal the reference NFA") {

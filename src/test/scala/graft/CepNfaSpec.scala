@@ -417,8 +417,9 @@ class CepNfaSpec extends SparkSpecBase {
     (1 to 25).foreach { round =>
       val traffic = (0 until 6).map(k => (k.toLong, traffic3()))
       val got = pat3.detect(toDf3(traffic))
-        .select("user_id", "run_start_us", "run_end_us", "mid_ts_us",
-          "next_ts_us", "run_count")
+        .select(col("user_id"), col("run_start_us"), col("run_end_us"),
+          element_at(col("mid_ts_us_list"), 1), col("next_ts_us"),
+          col("run_count"))
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
           r.getLong(3), r.getLong(4), r.getLong(5)))
         .toSeq.sortBy(m => (m._1, m._2))
@@ -435,14 +436,14 @@ class CepNfaSpec extends SparkSpecBase {
         }
       })
       val qn = s"cep3_$round"
-      val q = pat3.detectThreeStageStream(
+      val q = pat3.detectChainStream(
           mem.toDF.toDF("user_id", "event_id", "ts", "value"))
         .writeStream.format("memory").queryName(qn)
         .outputMode("append").start()
       try q.processAllAvailable() finally q.stop()
       val got = spark.table(qn).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
-          r.getLong(4), r.getLong(5)))
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+          r.getSeq[Long](3).head, r.getLong(4), r.getLong(5)))
         .toSeq.sortBy(m => (m._1, m._2))
       assert(got == expected3(traffic),
         s"3-stage streaming round $round diverged\n traffic=$traffic")
@@ -479,7 +480,8 @@ class CepNfaSpec extends SparkSpecBase {
       .followedBy(col("value") > 90)
       .within(Within)
     val got = pat3.detect(df)
-      .select("user_id", "run_start_us", "run_end_us", "mid_ts_us", "next_ts_us")
+      .select(col("user_id"), col("run_start_us"), col("run_end_us"),
+        element_at(col("mid_ts_us_list"), 1), col("next_ts_us"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4))).toSeq.sortBy(_._1)
     assert(got == Seq(
@@ -753,17 +755,19 @@ class CepNfaSpec extends SparkSpecBase {
       .followedBy(col("value") >= 70 && col("value") < 80)
       .followedBy(col("value") > 90)
       .within(Within)
-    def writeFile(name: String, rows: Seq[(Long, Long, Long, Double)]): Unit =
-      java.nio.file.Files.write(java.nio.file.Paths.get(in, name),
+    def writeFile(name: String, rows: Seq[(Long, Long, Long, Double)],
+        dir: String = in): Unit =
+      java.nio.file.Files.write(java.nio.file.Paths.get(dir, name),
         rows.map { case (k, id, ts, v) =>
           s"""{"user_id":$k,"event_id":$id,"ts":$ts,"value":$v}"""
         }.mkString("\n").getBytes("UTF-8"))
     val schema = org.apache.spark.sql.types.StructType.fromDDL(
       "user_id LONG, event_id LONG, ts LONG, value DOUBLE")
-    def runOnce(): Unit = {
-      val src = spark.readStream.format("json").schema(schema).load(in)
-      val q = chainPattern.detectChainStream(src).writeStream.format("json")
-        .option("path", out).option("checkpointLocation", ck)
+    def runOnce(pattern: CepPattern = chainPattern, dirs: (String, String,
+        String) = (in, out, ck)): Unit = {
+      val src = spark.readStream.format("json").schema(schema).load(dirs._1)
+      val q = pattern.detectChainStream(src).writeStream.format("json")
+        .option("path", dirs._2).option("checkpointLocation", dirs._3)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
       q.awaitTermination()
     }
@@ -790,6 +794,35 @@ class CepNfaSpec extends SparkSpecBase {
       (1L, 10L, Min * 10L, Vector(50L, 60L), 70L, Min),
       (2L, 10L, Min * 10L, Vector(50L, 55L), 65L, Min)),
       s"pending stages must survive the restart: got $got")
+
+    // one-middle leg, through the same chain fold: key 1 stops after its
+    // pending entry is installed, key 2 before it
+    val oneMid = (s"$base/in1", s"$base/out1", s"$base/ck1")
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(oneMid._1))
+    val oneMidPattern = CepPattern.on("user_id")
+      .where(col("value") < 10).times(Min, Max)
+      .followedBy(col("value") >= 60 && col("value") < 70)
+      .followedBy(col("value") > 90)
+      .within(Within)
+    writeFile("p1.jsonl",
+      (1 to Min.toInt).map(i => (1L, i.toLong, i * 10L, 5.0)) ++ Seq(
+        (1L, 90L, 50L, 65.0)) ++
+      (1 to Min.toInt).map(i => (2L, i.toLong, i * 10L, 5.0)), oneMid._1)
+    runOnce(oneMidPattern, oneMid)
+    assert(spark.read.schema(outSchema).json(oneMid._2).count() == 0,
+      "nothing completes in the one-middle run 1")
+    writeFile("p2.jsonl", Seq(
+      (1L, 91L, 70L, 95.0),
+      (2L, 90L, 55L, 65.0), (2L, 91L, 65L, 95.0)), oneMid._1)
+    runOnce(oneMidPattern, oneMid)
+    val gotOne = spark.read.schema(outSchema).json(oneMid._2)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+        r.getSeq[Long](3).toVector, r.getLong(4), r.getLong(5)))
+      .toSeq.sortBy(_._1)
+    assert(gotOne == Seq(
+      (1L, 10L, Min * 10L, Vector(50L), 70L, Min),
+      (2L, 10L, Min * 10L, Vector(55L), 65L, Min)),
+      s"the one-middle pending entry must survive the restart: got $gotOne")
   }
 
   test("interpreter self-consistency: replayChain at m = 1 == replayThreeStage") {
@@ -836,5 +869,46 @@ class CepNfaSpec extends SparkSpecBase {
       (10L, 5.0), (20L, 5.0), (30L, 75.0), (40L, 65.0), (50L, 95.0))))
     assert(bad.count() == 0L,
       "a B2 preceding B1 must never complete the chain")
+  }
+
+  test("a non-integral id is refused by every fold mode, batch and stream, before any query starts") {
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    // two run events at one ts with ids 1.2 and 1.7: as longs both are 1,
+    // so the tie order is lost and a stream would drop the second as late
+    val rows = Seq((1L, 1.0, 10L, 5.0), (1L, 1.2, 20L, 5.0),
+      (1L, 1.7, 20L, 5.0), (1L, 2.0, 30L, 95.0))
+    val df = rows.toDF("user_id", "event_id", "__us", "value")
+      .withColumn("ts", timestamp_micros(col("__us"))).drop("__us")
+    val relaxed = CepPattern.on("user_id")
+      .where(col("value") < 10).times(2, 8)
+      .followedBy(col("value") > 90).within(Within)
+    val strict = CepPattern.on("user_id")
+      .where(col("value") < 10).times(2, 8)
+      .next(col("value") > 90).within(Within)
+    val chain = CepPattern.on("user_id")
+      .where(col("value") < 10).times(2, 8)
+      .followedBy(col("value") > 60 && col("value") < 80)
+      .followedBy(col("value") > 90).within(Within)
+    def refused(column: String)(run: => Any): Unit = {
+      val e = intercept[IllegalArgumentException](run)
+      assert(e.getMessage.contains(s"'$column'"), e.getMessage)
+    }
+    refused("event_id")(relaxed.detect(df))
+    refused("event_id")(negPattern.detect(df))
+    refused("event_id")(chain.detect(df))
+    val src = MemoryStream[(Long, Double, Long, Double)].toDF()
+      .toDF("user_id", "event_id", "ts", "value")
+    refused("event_id")(relaxed.detectStream(src))
+    refused("event_id")(negPattern.detectStream(src))
+    refused("event_id")(strict.detectStream(src))
+    refused("event_id")(chain.detectChainStream(src))
+    // the streams also key by an integral key and read epoch-micro longs
+    val doubleKeys = MemoryStream[(Double, Long, Long, Double)].toDF()
+      .toDF("user_id", "event_id", "ts", "value")
+    refused("user_id")(relaxed.detectStream(doubleKeys))
+    refused("ts")(chain.detectChainStream(doubleKeys
+      .withColumn("user_id", col("user_id").cast("long"))
+      .withColumn("ts", timestamp_micros(col("ts")))))
+    assert(spark.streams.active.isEmpty)
   }
 }

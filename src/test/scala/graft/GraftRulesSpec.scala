@@ -47,7 +47,7 @@ class GraftRulesSpec extends SparkSpecBase {
     // a registered function is left in place, not replaced (a replacement
     // logs a WARN per function on every query)
     val second = infos
-    assert(first.size == 24 && second.keySet == first.keySet)
+    assert(first.size == 23 && second.keySet == first.keySet)
     first.foreach { case (name, info) => assert(second(name) eq info, name) }
   }
 }

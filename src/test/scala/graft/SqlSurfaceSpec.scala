@@ -79,8 +79,9 @@ class SqlSurfaceSpec extends SparkSpecBase {
       .collect().map(r => (r.getLong(0), r.getInt(1))).toMap
     assert(rows.forall(r => api(r.getLong(0)) == r.getInt(1)))
     // r13 expressions resolve from SQL: the perceptual hash over a binary
-    // payload, and both CEP folds (positive with the optional quantifier
-    // flags, negative with the flush flag)
+    // payload, and the three CEP folds (positive with the optional
+    // quantifier flags, negative with the flush flag, the chain with its
+    // middle count)
     val ph = spark.sql(
       "SELECT graft_phash64(CAST(text AS BINARY)) AS ph FROM documents LIMIT 5")
       .collect().map(_.getLong(0))
@@ -100,6 +101,15 @@ class SqlSurfaceSpec extends SparkSpecBase {
       .first().getSeq[org.apache.spark.sql.Row](0)
     assert(neg.map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       == Seq((10L, 20L, 110L, 2L)))
+    val chainEvs = "array(struct(10L AS t, 1L AS id, 0 AS k), " +
+      "struct(20L AS t, 2L AS id, 0 AS k), " +
+      "struct(25L AS t, 3L AS id, 1 AS k), " +
+      "struct(30L AS t, 4L AS id, 2 AS k))"
+    val chain = spark.sql(
+      s"SELECT graft_cep_fold_chain($chainEvs, 2L, 100L, 1) AS m")
+      .first().getSeq[org.apache.spark.sql.Row](0)
+    assert(chain.map(r => (r.getLong(0), r.getLong(1), r.getSeq[Long](2),
+      r.getLong(3))) == Seq((10L, 20L, Seq(25L), 30L)))
   }
 
   test("graft_bloom resolves from SQL; distributed build equals single-partition build") {
