@@ -44,6 +44,7 @@ object GraftFunctions {
         args(3).eval().asInstanceOf[Number].intValue) },
     "graft_ln" -> { args => PortableLn(args(0)) },
     "graft_nfc" -> { args => NfcNormalize(args(0)) },
+    "graft_from_json" -> { args => JsonBytesToStruct(args(0), args(1).eval().toString) },
     "graft_mg_topk" -> { args =>
       MisraGriesTopK(args(0), args(1).eval().asInstanceOf[Number].intValue)
         .toAggregateExpression() },
@@ -84,14 +85,15 @@ object GraftFunctions {
       missing(ex.extraStrategies, graft.plans.GraftRules.strategies.map(_(spark)))
   }
 
-  /** Make `graft_ln` resolvable on ANY session, registered or not:
-    * [[graft.operators.PortableHll.estimate]] is public API whose
-    * linear-counting branch needs the libm-parity ln, and a hidden
-    * whole-registry precondition on it would break callers that never
-    * touched GraftSession/GraftExtensions. Idempotent.
+  /** Make one function resolvable on ANY session, registered or not.
+    * Public API that calls a graft function goes through it: e.g.
+    * [[graft.operators.PortableHll.estimate]]'s linear-counting branch
+    * needs `graft_ln`, and `StreamingAnomaly.parse` needs
+    * `graft_from_json`; a hidden whole-registry precondition would break
+    * callers that never touched GraftSession/GraftExtensions. Idempotent.
     */
-  def ensureLn(spark: SparkSession): Unit =
-    registerMissing(spark, builders.filter(_._1 == "graft_ln"))
+  def ensure(spark: SparkSession, name: String): Unit =
+    registerMissing(spark, builders.filter(_._1 == name))
 
   private def registerMissing(spark: SparkSession,
       fns: Seq[(String, Seq[Expression] => Expression)]): Unit = {
@@ -137,6 +139,8 @@ object GraftFunctions {
       org.apache.spark.sql.functions.lit(withinUs),
       org.apache.spark.sql.functions.lit(nMids))
   def graftNfc(s: Column): Column = call_function("graft_nfc", s)
+  def graftFromJson(json: Column, schema: org.apache.spark.sql.types.StructType): Column =
+    call_function("graft_from_json", json, org.apache.spark.sql.functions.lit(schema.toDDL))
   def graftPHash64(payload: Column): Column =
     call_function("graft_phash64", payload)
   def graftByteAffine(payload: Column, mul: Int, add: Int, drop: Int): Column =

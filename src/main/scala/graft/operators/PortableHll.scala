@@ -83,9 +83,9 @@ object PortableHll {
     // parity with DuckDB's LN), NOT the builtin log (StrictMath/fdlibm,
     // measured last-ulp off libm on some integer args): this branch is
     // the active regime at small cardinalities and backs hash gates.
-    // ensureLn: estimate() is public API — it must resolve on sessions
+    // ensure: estimate() is public API — it must resolve on sessions
     // that never went through GraftSession/register()
-    graft.functions.GraftFunctions.ensureLn(regs.sparkSession)
+    graft.functions.GraftFunctions.ensure(regs.sparkSession, "graft_ln")
     def ln(c: Column): Column = graft.functions.GraftFunctions.graftLn(c)
     folded.select(grpCols.map(col) :+
       when(raw <= lit(2560.0) && v > 0,

@@ -17,7 +17,8 @@ object GraftRules {
     _ => CollapseDistinctShingles,
     ManifestPrune(_),
     ManifestAgg(_),
-    BloomPrune(_))
+    BloomPrune(_),
+    _ => PruneJsonFields)
 
   val strategies: Seq[SparkSession => SparkStrategy] = Seq(_ => IntervalJoinStrategy)
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
 
+import graft.functions.GraftFunctions
 import graft.model.{AttackResult, NetworkEvent}
 
 /** Structured-Streaming re-expression of the reference Flink job
@@ -39,19 +40,28 @@ object StreamingAnomaly {
     * primitive: a missing or non-numeric one would fail the whole query at
     * deserialization.
     *
+    * Each line is parsed by `graft_from_json` ([[graft.functions.JsonBytesToStruct]]):
+    * Spark's `from_json` parser, fed the line's UTF-8 bytes instead of a
+    * per-record char reader, and returning the same rows. On a session
+    * with graft's rules, `graft.plans.PruneJsonFields` narrows its schema
+    * to the fields read downstream: under [[detectAttacks]] it converts
+    * only the six `CepEvent` fields; a consumer of whole events keeps all
+    * twelve.
+    *
     * The columns come out of a generator rather than a `select("e.*")` over
     * a parsed struct: Catalyst pushes a filter on the struct's fields below
-    * that Project and substitutes the alias, so `from_json` (an interpreted
-    * Jackson parse) would run once per conjunct plus once for the columns.
-    * A filter on a generator's output stays above it, so each line is
-    * parsed once; for a line that does not parse, `inline` yields an
-    * all-null row, which the filter drops.
+    * that Project and substitutes the alias, so the parse would run once
+    * per conjunct plus once for the columns. A filter on a generator's
+    * output stays above it, so each line is parsed once; for a line that
+    * does not parse, `inline` yields an all-null row, which the filter
+    * drops.
     */
   def parse(jsonLines: DataFrame): Dataset[NetworkEvent] = {
     val spark = jsonLines.sparkSession
     import spark.implicits._
+    GraftFunctions.ensure(spark, "graft_from_json")
     jsonLines
-      .select(inline(array(from_json(col("value").cast(StringType), eventSchema))))
+      .select(inline(array(GraftFunctions.graftFromJson(col("value").cast(StringType), eventSchema))))
       .filter(Seq("ip_dst", "timestamp_start", "timestamp_end", "packets", "bytes")
         .map(col(_).isNotNull).reduce(_ && _))
       .as[NetworkEvent]

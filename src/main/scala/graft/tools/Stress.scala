@@ -537,11 +537,21 @@ object Stress {
       // to rows: without it, lz4 flattens the hot partition (100k rows
       // sharing one user_id compress away) and the skew is invisible to
       // the byte metric AQE itself splits on
+      // AQE calls a partition skewed above skewedPartitionFactor x the
+      // median partition; with one shuffle partition per core (2 at 2
+      // cores) the median is the mean, which no partition can exceed twice,
+      // so the split could never fire: this leg shuffles into many
+      // partitions. It can cut the hot partition only between map outputs,
+      // and the events of a few copies are a few map tasks, so the hot side
+      // is spread over as many map partitions up front.
+      val parts = 8 * spark.sparkContext.defaultParallelism
       val hot10 = evN.withColumn("user_id",
         when(pmod(col("event_id"), lit(10)) === 0, lit(777L))
           .otherwise(col("user_id")))
         .withColumn("payload",
           sha2(concat_ws(":", col("event_id"), col("user_id"), col("ts")), 256))
+        .repartition(parts)
+        .localCheckpoint(true)
       // one row per user; broadcast disabled below so the join shuffles
       val dim10 = hot10.select("user_id").distinct()
         .withColumn("w", pmod(col("user_id"), lit(997)))
@@ -580,9 +590,11 @@ object Stress {
         "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
         "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
         "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        "spark.sql.adaptive.coalescePartitions.enabled")
+        "spark.sql.adaptive.coalescePartitions.enabled",
+        "spark.sql.shuffle.partitions")
         .map(k => k -> spark.conf.getOption(k)).toMap
       try {
+        spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
         // coalescing would merge the skew-split partitions right back
@@ -600,16 +612,16 @@ object Stress {
           f"probe must observe the planted 10%% hot key: share=$shareOff%.3f")
         spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
         // the production 256 MB/64 MB thresholds scaled to THIS corpus's
-        // measured stage size (threshold just under the 1/32 median, split
-        // grain well under the hot partition) — the RATIO assert is
-        // size-free, so the stage holds at any SF the driver runs
-        val par = spark.sparkContext.defaultParallelism.toLong
+        // measured stage size (threshold half the mean partition, split
+        // grain a quarter of it, both well under the hot partition) — the
+        // RATIO assert is size-free, so the stage holds at any SF the
+        // driver runs
         spark.conf.set(
           "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-          math.max(sumOff / (2L * par), 64L * 1024L).toString)
+          math.max(sumOff / (2L * parts), 64L * 1024L).toString)
         spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
         spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-          math.max(sumOff / (4L * par), 32L * 1024L).toString)
+          math.max(sumOff / (4L * parts), 32L * 1024L).toString)
         val (shareOn, _) = maxTaskShare(
           s"hot10-join skew-split ON x$copies")(hotJoin())
         require(shareOn <= shareOff / 2,

@@ -22,7 +22,7 @@ class GraftRulesSpec extends SparkSpecBase {
   }
 
   private val ruleClasses = Seq(CollapseDistinctShingles.getClass,
-    classOf[ManifestPrune], classOf[ManifestAgg], classOf[BloomPrune])
+    classOf[ManifestPrune], classOf[ManifestAgg], classOf[BloomPrune], PruneJsonFields.getClass)
   private def sessionRules = spark.experimental.extraOptimizations.map(_.getClass)
   private def sessionStrategies = spark.experimental.extraStrategies.map(_.getClass)
 
@@ -47,7 +47,7 @@ class GraftRulesSpec extends SparkSpecBase {
     // a registered function is left in place, not replaced (a replacement
     // logs a WARN per function on every query)
     val second = infos
-    assert(first.size == 23 && second.keySet == first.keySet)
+    assert(first.size == 24 && second.keySet == first.keySet)
     first.foreach { case (name, info) => assert(second(name) eq info, name) }
   }
 }

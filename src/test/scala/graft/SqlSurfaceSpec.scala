@@ -249,4 +249,16 @@ class SqlSurfaceSpec extends SparkSpecBase {
       .collect().head.getDouble(0)
     assert(sql == 6000.0, s"SQL graft_theta_union(sk, 8192) gave $sql")
   }
+
+  test("graft_from_json resolves from SQL with a DDL schema and matches from_json") {
+    val rows = spark.sql(
+      """SELECT graft_from_json(v, 'a STRING, b INT, c ARRAY<BIGINT>') AS g,
+        |       from_json(v, 'a STRING, b INT, c ARRAY<BIGINT>') AS s
+        |FROM VALUES ('{"a":"x","b":2,"c":[1,2]}'), ('{"a":{"k":1},"b":"no"}'),
+        |            ('not json'), (NULL) AS t(v)""".stripMargin).collect()
+    assert(rows.length == 4)
+    rows.foreach(r => assert(r.get(0) == r.get(1), r))
+    assert(rows(0).getStruct(0).getString(0) == "x" && rows(0).getStruct(0).getInt(1) == 2)
+    assert(rows(3).isNullAt(0))
+  }
 }

@@ -598,7 +598,7 @@ class StreamingSpec extends SparkSpecBase {
     // re-parses the line once per conjunct; the generator shape keeps one
     val parsed = StreamingAnomaly.parse(toWireJson(events.take(10)).toDF("value"))
     val parses = parsed.queryExecution.optimizedPlan.flatMap(_.expressions
-      .flatMap(_.collect { case j: org.apache.spark.sql.catalyst.expressions.JsonToStructs => j }))
+      .flatMap(_.collect { case j: graft.functions.JsonBytesToStruct => j }))
     assert(parses.length == 1, parsed.queryExecution.optimizedPlan.treeString)
   }
 
