@@ -543,14 +543,18 @@ object Stress {
       // so the split could never fire: this leg shuffles into many
       // partitions. It can cut the hot partition only between map outputs,
       // and the events of a few copies are a few map tasks, so the hot side
-      // is spread over as many map partitions up front.
-      val parts = 8 * spark.sparkContext.defaultParallelism
+      // is spread over one map partition per core up front. Not one per
+      // shuffle partition: at 32 cores that is 256 x 256 shuffle blocks,
+      // whose fixed per-block bytes grew the stage (17.9 MB, not 14.6 MB at
+      // sf0.1 x 2) until the hot task's share fell under the probe's floor.
+      val cores = spark.sparkContext.defaultParallelism
+      val parts = 8 * cores
       val hot10 = evN.withColumn("user_id",
         when(pmod(col("event_id"), lit(10)) === 0, lit(777L))
           .otherwise(col("user_id")))
         .withColumn("payload",
           sha2(concat_ws(":", col("event_id"), col("user_id"), col("ts")), 256))
-        .repartition(parts)
+        .repartition(cores)
         .localCheckpoint(true)
       // one row per user; broadcast disabled below so the join shuffles
       val dim10 = hot10.select("user_id").distinct()
